@@ -11,42 +11,49 @@ start/end offsets into the raw turn text; spans are re-derivable via
 text[start:end] == mention (the reference's char_span validity filter,
 api/app.py:64-66).
 
-Three engines, one output contract:
+Two extractors, one output contract, one job each:
 
-* regex alternation (longest-first) — exact reference-parity baseline for
-  small pattern lists; pattern compile is O(#aliases) per worker.
-* Aho-Corasick automaton (public algorithm, Aho & Corasick CACM 1975) —
-  the many-pattern path: one text scan regardless of pattern count. The
-  pattern list ships as a Spark broadcast (torrent distribution, not task
-  closures) and the automaton is built ONCE per python worker and cached.
-* `extract_mentions_gazetteer` — the 100 TB path: a tokenize->join gazetteer
-  with NO driver-side pattern list at all. Turns explode into word-run
-  tokens with char offsets; tokens join the alias table on the alias's first
-  word; full-alias verification, word-boundary checks, and the greedy
-  leftmost-longest fold are all JVM expressions. Cost is one join shuffled
-  (or broadcast) on first-word — linear in corpus size, independent of how
+* `extract_mentions_gazetteer` — every caller that can aggregate: the batch
+  CLI/pipeline path and the foreachBatch streams. A tokenize->join
+  gazetteer with NO driver-side pattern list: turns explode into word-run
+  tokens with char offsets; tokens join the alias table on the alias's
+  first word; full-alias verification, word-boundary checks and the greedy
+  leftmost-longest fold are JVM expressions. Cost is one join on first-word
+  plus one per-turn groupBy — linear in corpus size, independent of how
   the alias table is stored.
+* `extract_mentions` — the in-row matcher for unbounded streams
+  (`link_stream`, `entity_counts_windowed`), where that per-turn groupBy
+  fold is not allowed. An Aho-Corasick automaton (Aho & Corasick, CACM
+  1975) scans each text once whatever the pattern count; the pattern list
+  ships as one Spark broadcast per call and each python worker builds the
+  automaton once per broadcast.
+
+Both return the same spans except for aliases with no word character
+(e.g. "++"): `extract_mentions` matches them, the gazetteer has no first
+word to join on and drops them.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
 from collections import deque
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spacy_ann_linker_spark.schemas import SPAN_STRUCT
 
-# patterns below this count compile into one regex (cheap, reference-exact);
-# at or above it the Aho-Corasick automaton takes over (regex alternation
-# compile + scan cost grows with pattern count; AC scan does not)
-AC_MIN_PATTERNS = 256
-
 _WORD_RE = re.compile(r"\w")
+
+# Python's str \w (str.isalnum() or "_") as a Java regex class, for the
+# gazetteer's JVM side. Java's \w is ASCII-only, so an alias like "Zürich"
+# never joined; (?U)\w is closer but still counts combining marks as word
+# characters (Devanagari vowel signs, NFD accents) and misses non-decimal
+# numerics ("½"). This class agrees with Python on every code point both
+# runtimes' Unicode tables assign.
+_JAVA_WORD = r"\p{L}\p{N}_"
 
 
 class AhoCorasick:
@@ -54,14 +61,12 @@ class AhoCorasick:
     Corasick, CACM 1975). goto/fail/output tables over dict transitions;
     `iter_matches` yields every raw occurrence (start, end) in one pass."""
 
-    def __init__(self, patterns: list[str], case_insensitive: bool = False):
-        self.ci = case_insensitive
+    def __init__(self, patterns: list[str]):
         self.goto: list[dict] = [{}]
         self.out: list[tuple] = [()]
         for p in sorted({p for p in patterns if p}):
-            key = p.lower() if case_insensitive else p
             s = 0
-            for ch in key:
+            for ch in p:
                 nxt = self.goto[s].get(ch)
                 if nxt is None:
                     self.goto.append({})
@@ -69,7 +74,7 @@ class AhoCorasick:
                     nxt = len(self.goto) - 1
                     self.goto[s][ch] = nxt
                 s = nxt
-            self.out[s] = self.out[s] + (len(key),)
+            self.out[s] = self.out[s] + (len(p),)
         self.fail = [0] * len(self.goto)
         q = deque(self.goto[0].values())
         while q:
@@ -94,40 +99,15 @@ class AhoCorasick:
                 yield i + 1 - ln, i + 1
 
 
-def _compile(patterns: list[str], case_insensitive: bool) -> "re.Pattern":
-    ordered = sorted(set(p for p in patterns if p), key=len, reverse=True)
-    body = "|".join(re.escape(p) for p in ordered)
-    flags = re.IGNORECASE if case_insensitive else 0
-    return re.compile(rf"(?<!\w)(?:{body})(?!\w)", flags)
-
-
-def find_spans(text: str, rx: "re.Pattern", label: str | None) -> list[dict]:
+def find_spans_ac(text: str, ac: AhoCorasick, label: str | None) -> list[dict]:
+    """Word-boundary-anchored, leftmost-longest, non-overlapping spans of
+    `ac`'s patterns in `text`: the matches a longest-first regex
+    alternation `(?<!\\w)(?:p1|p2|...)(?!\\w)` finds with finditer."""
     if not text:
         return []
-    return [
-        {"text": m.group(0), "start": m.start(), "end": m.end(), "label": label}
-        for m in rx.finditer(text)
-    ]
-
-
-def find_spans_ac(text: str, ac: AhoCorasick, label: str | None) -> list[dict] | None:
-    """AC-based equivalent of `find_spans`: word-boundary filter + greedy
-    leftmost-longest selection replicate the regex scanner exactly (the
-    scanner never retries a position before the previous match's end, and at
-    each position the longest alternative wins). Returns None — caller falls
-    back to the regex engine for that text — when lower() changes string
-    length (rare unicode) OR when the text contains chars whose lower() and
-    casefold() disagree (e.g. 'ſ' LATIN SMALL LETTER LONG S: re.IGNORECASE
-    simple-folds it to 's' but lower() keeps it, so the AC automaton built
-    on lower() would miss matches the reference regex path finds)."""
-    if not text:
-        return []
-    key = text.lower() if ac.ci else text
-    if ac.ci and (len(key) != len(text) or key != text.casefold()):
-        return None
     n = len(text)
     best: dict[int, int] = {}
-    for st, en in ac.iter_matches(key):
+    for st, en in ac.iter_matches(text):
         if st > 0 and _WORD_RE.match(text[st - 1]):
             continue
         if en < n and _WORD_RE.match(text[en]):
@@ -146,118 +126,52 @@ def find_spans_ac(text: str, ac: AhoCorasick, label: str | None) -> list[dict] |
     return spans
 
 
-# per-python-worker automaton/regex cache: the broadcast value is shared
-# executor memory; compiling once per worker (not per batch) is the point
-_MATCHER_CACHE: dict[str, object] = {}
-
-# driver-side broadcast cache: one Spark broadcast per distinct pattern set,
-# reused across extract_mentions calls — a long-running serve process would
-# otherwise accumulate one broadcast per request until ContextCleaner GC.
-# All access goes through _BROADCAST_LOCK: LRU touches MUTATE the dict on
-# every hit, and concurrent /link handler threads (plus a streaming
-# micro-batch on the same driver) would otherwise race pop/insert.
-import threading as _threading
-
-_BROADCAST_LOCK = _threading.Lock()
-_BROADCAST_CACHE: dict[str, object] = {}
-_BROADCAST_CACHE_MAX = 64
+# per-python-worker automata, keyed by broadcast id: built once per worker
+# from the broadcast pattern list, not once per task or Arrow batch
+_AUTOMATA: dict[int, AhoCorasick] = {}
+_AUTOMATA_MAX = 64
 
 
-def _patterns_key(patterns: list[str], ci: bool, kind: str) -> str:
-    h = hashlib.blake2b(digest_size=12)
-    h.update(f"{kind}:{ci}:".encode())
-    for p in sorted(set(patterns)):
-        h.update(p.encode("utf-8", "ignore") + b"\x00")
-    return h.hexdigest()
+def _automaton(bid: int, bc) -> AhoCorasick:
+    # module-level on purpose: the UDF closure is pickled by value, and a
+    # global it touched directly would arrive as a fresh copy in every task;
+    # a call into this importable function reaches the worker's own cache
+    ac = _AUTOMATA.get(bid)
+    if ac is None:
+        if len(_AUTOMATA) >= _AUTOMATA_MAX:  # bound worker memory across jobs
+            _AUTOMATA.clear()
+        ac = _AUTOMATA[bid] = AhoCorasick(bc.value)
+    return ac
 
 
-def _get_pattern_broadcast(sc, patterns: list[str]):
-    key = _patterns_key(patterns, False, "bc")
-    with _BROADCAST_LOCK:
-        bc = _BROADCAST_CACHE.pop(key, None)
-        if bc is not None:
-            _BROADCAST_CACHE[key] = bc  # re-insert = mark most-recent (LRU)
-            return bc
-    # create the broadcast OUTSIDE the lock: driver-side serialization of a
-    # big gazetteer takes seconds, and holding the lock across it would
-    # stall every concurrent extract call — including pure cache hits on
-    # other keys. Double-checked insert below; the worst case is one benign
-    # orphan broadcast when two threads race the same new key.
-    new_bc = sc.broadcast(list(patterns))
-    with _BROADCAST_LOCK:
-        bc = _BROADCAST_CACHE.get(key)
-        if bc is not None:
-            _BROADCAST_CACHE[key] = _BROADCAST_CACHE.pop(key)
-            try:
-                new_bc.unpersist()
-            except Exception:
-                pass
-            return bc
-        while len(_BROADCAST_CACHE) >= _BROADCAST_CACHE_MAX:
-            # bound driver/executor memory by evicting the LRU entry ONLY —
-            # clearing the whole cache would unpersist hot entries (and
-            # broadcasts referenced by in-flight queries on other threads),
-            # forcing executors to refetch every pattern set from the driver
-            # while the cache rebuilds from zero
-            old = _BROADCAST_CACHE.pop(next(iter(_BROADCAST_CACHE)))
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _BROADCAST_CACHE[key] = new_bc
-        return new_bc
+def _spans_udf(spark: SparkSession, patterns: list[str], label: str | None):
+    """pandas UDF text -> array<SPAN_STRUCT> over one broadcast of
+    `patterns` (the in-row matcher behind `extract_mentions`)."""
+    bc = spark.sparkContext.broadcast(list(patterns))
+    bid = bc._jbroadcast.id()
+
+    @F.pandas_udf(T.ArrayType(SPAN_STRUCT))
+    def spans_udf(texts: pd.Series) -> pd.Series:
+        ac = _automaton(bid, bc)
+        return texts.map(lambda t: find_spans_ac(t, ac, label))
+
+    return spans_udf
 
 
 def extract_mentions(
     turns: DataFrame,
     patterns: list[str],
     label: str | None = None,
-    case_insensitive: bool = False,
-    engine: str = "auto",
 ) -> DataFrame:
-    """turns (TRANSCRIPT_SCHEMA) -> mentions (MENTION_SCHEMA).
+    """turns (TRANSCRIPT_SCHEMA) -> mentions (MENTION_SCHEMA), in-row.
 
-    engine: "auto" (AC at >= AC_MIN_PATTERNS, regex below), "regex", "ac".
-    Patterns reach executors as a Spark broadcast either way; matchers are
-    built once per worker from the broadcast and cached.
+    The extractor for unbounded streams; callers that can aggregate use
+    `extract_mentions_gazetteer`. Same spans as the gazetteer, plus aliases
+    with no word character (e.g. "++"), which the gazetteer drops.
 
     mention_id = xxhash64(conv_id, turn_idx, start): deterministic and
     shuffle-free (no monotonically_increasing_id / zipWithIndex)."""
-    use_ac = engine == "ac" or (engine == "auto" and len(patterns) >= AC_MIN_PATTERNS)
-    if use_ac and case_insensitive and engine != "ac":
-        # patterns whose lower() and casefold() disagree (ſ, ß, ...) make the
-        # lower()-keyed automaton miss matches re.IGNORECASE finds — keep the
-        # reference-exact regex engine for those pattern sets (the text-side
-        # equivalent falls back per-text inside find_spans_ac)
-        if any(len(p.lower()) != len(p) or p.lower() != p.casefold() for p in patterns):
-            use_ac = False
-    sc = turns.sparkSession.sparkContext
-    bc = _get_pattern_broadcast(sc, patterns)
-    key = _patterns_key(patterns, case_insensitive, "ac" if use_ac else "rx")
-
-    @F.pandas_udf(T.ArrayType(SPAN_STRUCT))
-    def spans_udf(texts: pd.Series) -> pd.Series:
-        if len(_MATCHER_CACHE) > 64:  # bound worker memory across jobs
-            _MATCHER_CACHE.clear()
-        if use_ac:
-            ac = _MATCHER_CACHE.get(key)
-            if ac is None:
-                ac = _MATCHER_CACHE.setdefault(key, AhoCorasick(bc.value, case_insensitive))
-            rx = None  # regex fallback only for length-changing case folds
-            out = []
-            for t in texts:
-                spans = find_spans_ac(t or "", ac, label)
-                if spans is None:
-                    if rx is None:
-                        rx = _compile(bc.value, case_insensitive)
-                    spans = find_spans(t, rx, label)
-                out.append(spans)
-            return pd.Series(out)
-        rx = _MATCHER_CACHE.get(key)
-        if rx is None:
-            rx = _MATCHER_CACHE.setdefault(key, _compile(bc.value, case_insensitive))
-        return texts.map(lambda t: find_spans(t, rx, label))
-
+    spans_udf = _spans_udf(turns.sparkSession, patterns, label)
     return (
         turns.withColumn("_spans", spans_udf(F.col("text")))
         .select(
@@ -298,7 +212,6 @@ def extract_mentions_gazetteer(
     turns: DataFrame,
     aliases_df: DataFrame,
     label: str | None = None,
-    case_insensitive: bool = False,
     broadcast_aliases: bool = True,
     salt_buckets: int = 0,
 ) -> DataFrame:
@@ -310,27 +223,27 @@ def extract_mentions_gazetteer(
     drop the hint and the shuffle join handles alias tables of any size) ->
     verify the full alias via JVM substring equality + word-boundary checks
     -> greedy leftmost-longest fold per turn as a JVM `aggregate` over the
-    sorted match array (same selection the regex scanner makes).
+    sorted match array (the selection `extract_mentions` makes in-row).
 
-    Semantics match `extract_mentions` for ASCII text; boundary checks here
-    use Java's \\w (ASCII) vs Python's unicode \\w in the regex engine —
-    the one documented divergence, exercised nowhere in the fixtures.
+    Word characters are Python's \\w on both sides: the tokenizer runs in
+    Python and the JVM patterns use the same class (`_JAVA_WORD`). Same
+    spans as `extract_mentions`, except that an alias with no word
+    character (e.g. "++") has no first word to join on and is dropped
+    here.
 
     salt_buckets (only with broadcast_aliases=False): a hot first word
     shared by many aliases ("The ...") funnels every matching token to one
     reducer in the shuffle join; salt_buckets > 0 salts the token side
     deterministically and replicates aliases into every bucket — identical
     results (verified in tests), max reducer load / salt_buckets."""
-    al = aliases_df.select("alias").distinct()
     al = (
-        al.withColumn("_plen", F.length(F.regexp_extract("alias", r"^\W*", 0)))
-        .withColumn("_fw", F.regexp_extract("alias", r"\w+", 0))
-        .filter(F.col("_fw") != "")
+        aliases_df.select("alias")
+        .distinct()
+        .withColumn("_plen", F.length(F.regexp_extract("alias", f"^[^{_JAVA_WORD}]*", 0)))
+        .withColumn("_k", F.regexp_extract("alias", f"[{_JAVA_WORD}]+", 0))
+        .filter(F.col("_k") != "")
         .withColumn("_alen", F.length("alias"))
     )
-    tok_key = F.lower(F.col("_tok")) if case_insensitive else F.col("_tok")
-    fw_key = F.lower(F.col("_fw")) if case_insensitive else F.col("_fw")
-    al = al.withColumn("_k", fw_key).drop("_fw")
 
     toks = turns.select(
         "conv_id",
@@ -341,36 +254,32 @@ def extract_mentions_gazetteer(
         "conv_id",
         "turn_idx",
         "text",
-        F.col("_t.tok").alias("_tok"),
+        F.col("_t.tok").alias("_k"),
         F.col("_t.pos").alias("_pos"),
     )
 
     slice_ = F.expr("substring(text, _start + 1, _alen)")
-    alias_cmp = (
-        (F.lower(slice_) == F.lower(F.col("alias"))) if case_insensitive else (slice_ == F.col("alias"))
-    )
-    keyed_toks = toks.withColumn("_k", tok_key)
     if broadcast_aliases:
-        paired = keyed_toks.join(F.broadcast(al), "_k")
+        paired = toks.join(F.broadcast(al), "_k")
     elif salt_buckets > 0:
         from spacy_ann_linker_spark.operators.salted import salted_join
 
-        paired = salted_join(keyed_toks, al, key="_k", salt_buckets=salt_buckets)
+        paired = salted_join(toks, al, key="_k", salt_buckets=salt_buckets)
     else:
-        paired = keyed_toks.join(al, "_k")
+        paired = toks.join(al, "_k")
     cands = (
         paired.withColumn("_start", F.col("_pos") - F.col("_plen"))
         .filter(F.col("_start") >= 0)
-        .filter(alias_cmp)
+        .filter(slice_ == F.col("alias"))
         .withColumn("_end", F.col("_start") + F.col("_alen"))
         # word boundaries: char before start / after end must not be \w
         .filter(
             (F.col("_start") == 0)
-            | ~F.expr(r"substring(text, _start, 1) rlike '\\w'")
+            | ~F.expr("substring(text, _start, 1)").rlike(f"[{_JAVA_WORD}]")
         )
         .filter(
             (F.col("_end") >= F.length("text"))
-            | ~F.expr(r"substring(text, _end + 1, 1) rlike '\\w'")
+            | ~F.expr("substring(text, _end + 1, 1)").rlike(f"[{_JAVA_WORD}]")
         )
     )
 

@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """24g, or half the host's RAM when that is less: G1 grows the heap
+    toward its maximum before collecting hard, so a 24g heap on a 16 GB
+    host is OOM-killed by the kernel instead of collecting its garbage."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "spacy_ann_linker_spark",
     cores: int | None = None,
@@ -67,7 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         # AQE may legitimately pick a broadcast for a multi-million-row
         # dimension (e.g. the distinct-mention candidate map at 10^6+
         # distinct strings); don't let the default 1g result cap kill it

@@ -3,10 +3,16 @@
 The reference's only streaming-ish operator is `RemoteAnnLinker.pipe` — a
 generator minibatching docs (size 32) through an HTTP linker
 (remote_ann_linker.py:92-120, SURVEY.md B1). Its Spark re-expression is a
-streaming DataFrame flowing through the same mention-extraction UDF and a
+streaming DataFrame flowing through the in-row mention extractor and a
 stream-static broadcast join against the (static) alias->entity map: Arrow
 batches play the role of the 32-doc minibatch, executors play the gunicorn
 workers (cli/serve.py:52-57).
+
+Mention extraction follows `mentions/extract.py`'s split: the unbounded
+`link_stream` and `entity_counts_windowed` cannot aggregate per turn, so
+they use the in-row `extract_mentions`; the foreachBatch surfaces run the
+batch path's `extract_mentions_gazetteer` on every micro-batch, over an
+alias relation built once from `patterns` when the query starts.
 
 Two linking surfaces:
   * `link_stream` — stateless stream-static equi-join: the exact-alias fast
@@ -14,23 +20,27 @@ Two linking surfaces:
     latency, but window functions / top-k aren't available on unbounded
     streams so fuzzy mentions fall through.
   * `start_full_link_stream` — foreachBatch: every micro-batch runs the
-    COMPLETE batch linker (cosine candidates, JW rescue, context
-    disambiguation), the exact Spark shape of the reference's minibatch
-    pipe; idempotent per-batch-partition parquet sink.
+    COMPLETE batch linker (gazetteer extraction, cosine candidates, JW
+    rescue, context disambiguation), the exact Spark shape of the
+    reference's minibatch pipe; idempotent per-batch-partition parquet
+    sink.
 `entity_counts_windowed` is the stateful aggregate path: watermark +
 event-time windows, late turns beyond the watermark drop.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from spacy_ann_linker_spark.data.golden_kb import _local_relation
 from spacy_ann_linker_spark.kb.build import KnowledgeBase
-from spacy_ann_linker_spark.mentions.extract import _compile, extract_mentions, find_spans
-from spacy_ann_linker_spark.schemas import SPAN_STRUCT, TRANSCRIPT_SCHEMA
+from spacy_ann_linker_spark.mentions.extract import (
+    _spans_udf,
+    extract_mentions,
+    extract_mentions_gazetteer,
+)
+from spacy_ann_linker_spark.schemas import TRANSCRIPT_SCHEMA
 
 
 def alias_best_entity(kb: KnowledgeBase) -> DataFrame:
@@ -56,6 +66,12 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files: int = 4) -
     )
 
 
+def _pattern_aliases(spark: SparkSession, patterns: list[str]) -> DataFrame:
+    """`patterns` as the gazetteer's alias table: one JVM LocalRelation,
+    built once per query, never per micro-batch."""
+    return _local_relation(spark, [{"alias": p} for p in patterns], ["alias"], "alias string")
+
+
 def link_stream(stream: DataFrame, kb: KnowledgeBase, patterns: list[str]) -> DataFrame:
     """turns stream -> linked mentions stream (exact-alias path, stateless)."""
     mentions = extract_mentions(stream, patterns)
@@ -77,10 +93,11 @@ def start_full_link_stream(
     query_name: str = "full_link_stream",
 ):
     """Full-linker streaming surface via foreachBatch: each micro-batch of
-    turns runs the COMPLETE batch linker — extraction, TF-IDF cosine
-    candidates, JW fuzzy rescue, context disambiguation — and appends links
-    to `output_path` parquet. This is the exact Spark shape of the
-    reference's minibatch pipe (remote_ann_linker.py:92-120 links 32-doc
+    turns runs the COMPLETE batch linker — gazetteer extraction (the
+    `link_transcripts` extractor, so stream output equals batch output),
+    TF-IDF cosine candidates, JW fuzzy rescue, context disambiguation — and
+    appends links to `output_path` parquet. This is the exact Spark shape of
+    the reference's minibatch pipe (remote_ann_linker.py:92-120 links 32-doc
     batches through the full linker), and it lifts the stateless
     stream-static-join restriction of `link_stream` (which only covers the
     exact-alias path, J5): windows, top-k aggregates, and the rescue join
@@ -92,7 +109,8 @@ def start_full_link_stream(
     own partition (idempotent), the standard foreachBatch dedup recipe.
     Returns the StreamingQuery (caller stops it)."""
     from spacy_ann_linker_spark.link.linker import link_mentions, memo_scope
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+
+    aliases = _pattern_aliases(stream.sparkSession, patterns)
 
     def link_batch(batch_df: DataFrame, batch_id: int) -> None:
         # per-batch memo caches must not accumulate — and the release must be
@@ -100,7 +118,7 @@ def start_full_link_stream(
         # with any concurrent serve/batch caller, and a global release here
         # would unpersist memos those callers are mid-join on
         with memo_scope():
-            mentions = extract_mentions(batch_df, patterns)
+            mentions = extract_mentions_gazetteer(batch_df, aliases)
             links = link_mentions(
                 mentions,
                 batch_df,
@@ -139,13 +157,14 @@ def start_incremental_er_stream(
 ):
     """CONTINUOUS entity resolution over a transcript stream — the composed
     production loop this engine exists for: every micro-batch runs the full
-    batch linker (extraction, cosine candidates, JW rescue, disambiguation),
-    appends its links idempotently, derives the batch's mention<->entity
-    edges (the cluster_links node encoding: "m:"/"e:" prefixes), and folds
-    them into a PERSISTED (node, component) assignment with cluster
-    contraction (`cluster/cc.py:incremental_components`) — so each batch
-    costs O(batch edges), never O(history): yesterday's 10^10-node
-    clustering is an artifact read once per batch, not re-iterated.
+    batch linker (gazetteer extraction, cosine candidates, JW rescue,
+    disambiguation), appends its links idempotently, derives the batch's
+    mention<->entity edges (the cluster_links node encoding: "m:"/"e:"
+    prefixes), and folds them into a PERSISTED (node, component) assignment
+    with cluster contraction (`cluster/cc.py:incremental_components`) — so
+    each batch costs O(batch edges), never O(history): yesterday's
+    10^10-node clustering is an artifact read once per batch, not
+    re-iterated.
 
     State versioning: the assignment is parquet under
     `state_path/v{batch_id}`. foreachBatch can REPLAY a batch on failure, so
@@ -169,7 +188,8 @@ def start_incremental_er_stream(
 
     from spacy_ann_linker_spark.cluster.cc import incremental_components
     from spacy_ann_linker_spark.link.linker import link_mentions, memo_scope
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+
+    aliases = _pattern_aliases(stream.sparkSession, patterns)
 
     def _versions() -> list[int]:
         if not os.path.isdir(state_path):
@@ -183,7 +203,7 @@ def start_incremental_er_stream(
     def er_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         with memo_scope():
-            mentions = extract_mentions(batch_df, patterns)
+            mentions = extract_mentions_gazetteer(batch_df, aliases)
             links = link_mentions(
                 mentions,
                 batch_df,
@@ -285,13 +305,10 @@ def entity_counts_windowed(
     watermark: str = "2 hours",
 ) -> DataFrame:
     """Per-event-time-window entity mention counts with watermark
-    (append-mode capable; late turns beyond the watermark drop)."""
-
-    @F.pandas_udf(T.ArrayType(SPAN_STRUCT))
-    def spans_udf(texts: pd.Series) -> pd.Series:
-        rx = _compile(patterns, False)
-        return texts.map(lambda t: find_spans(t, rx, None))
-
+    (append-mode capable; late turns beyond the watermark drop). Mentions
+    come from `extract_mentions`'s in-row matcher, applied here to keep
+    the event time next to each span."""
+    spans_udf = _spans_udf(stream.sparkSession, patterns, None)
     wm = stream.withWatermark("ts", watermark)
     exploded = wm.withColumn("_s", F.explode(spans_udf(F.col("text")))).select(
         "ts", F.col("_s.text").alias("mtext")

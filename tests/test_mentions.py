@@ -1,8 +1,18 @@
 """Gazetteer mention extraction (F8-F10, C7)."""
 
+import re
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from spacy_ann_linker_spark.mentions.extract import extract_mentions, validate_spans
+from spacy_ann_linker_spark.mentions.extract import (
+    AhoCorasick,
+    extract_mentions,
+    extract_mentions_gazetteer,
+    find_spans_ac,
+    validate_spans,
+)
 
 
 def _turns(spark, text):
@@ -55,95 +65,18 @@ def test_validate_spans_filters_bad_offsets(spark):
     assert validate_spans(bad, t).count() == 0
 
 
-def test_ac_engine_matches_regex(spark):
-    """AC and regex engines are drop-in equivalent (same spans, same order)
-    on text exercising boundaries, overlaps, longest-wins, repeats."""
-    texts = [
-        "NLP and machine learning beat HTML ML parsing; ML!",
-        "machine learning machine learninging learning machine",
-        "(NLP) ML-ops nlp NLP2 2NLP NLP",
-        "",
-        "no mentions at all here",
-    ]
-    t = spark.createDataFrame(
-        [("c1", i, "user", s, "", None) for i, s in enumerate(texts)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    pats = ["NLP", "ML", "machine learning", "learning machine", "machine"]
-    want = [
-        (r["turn_idx"], r["text"], r["start"], r["end"])
-        for r in extract_mentions(t, pats, engine="regex").orderBy("turn_idx", "start").collect()
-    ]
-    got = [
-        (r["turn_idx"], r["text"], r["start"], r["end"])
-        for r in extract_mentions(t, pats, engine="ac").orderBy("turn_idx", "start").collect()
-    ]
-    assert want == got and len(want) > 5
-
-
-def test_ac_engine_case_insensitive_matches_regex(spark):
-    t = _turns(spark, "nlp NLP Nlp xNLP NLP2 machine Learning")
-    pats = ["NLP", "machine learning"]
-    want = [
-        (r["text"], r["start"]) for r in
-        extract_mentions(t, pats, case_insensitive=True, engine="regex").orderBy("start").collect()
-    ]
-    got = [
-        (r["text"], r["start"]) for r in
-        extract_mentions(t, pats, case_insensitive=True, engine="ac").orderBy("start").collect()
-    ]
-    assert want == got and len(want) == 4
-
-
-def test_ac_casefold_unicode_matches_regex(spark):
-    """ADVICE r2: re.IGNORECASE simple-folds 'ſ' (LONG S) to 's', but
-    lower() keeps it — the AC engine must fall back to regex for texts (or
-    pattern sets) where lower() and casefold() disagree, so both engines
-    return identical spans."""
-    texts = [
-        "nlpſ is here",   # text-side long s: regex matches pattern 'nlps'
-        "NLPS and nlps",
-        "straße walk",    # ß: casefold length-changes
-    ]
-    t = spark.createDataFrame(
-        [("c1", i, "user", s, "", None) for i, s in enumerate(texts)],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    pats = ["nlps", "walk"]
-    want = [
-        (r["turn_idx"], r["start"], r["end"])
-        for r in extract_mentions(t, pats, case_insensitive=True, engine="regex")
-        .orderBy("turn_idx", "start").collect()
-    ]
-    got = [
-        (r["turn_idx"], r["start"], r["end"])
-        for r in extract_mentions(t, pats, case_insensitive=True, engine="ac")
-        .orderBy("turn_idx", "start").collect()
-    ]
-    assert want == got
-    assert (0, 0, 4) in want  # the 'nlpſ' match regex finds must survive
-
-    # pattern-side long s: auto engine must stay on regex for this set
-    pats2 = ["nlpſ"] + [f"p{i}" for i in range(300)]  # >= AC_MIN_PATTERNS
-    t2 = _turns(spark, "NLPS appears")
-    got2 = extract_mentions(t2, pats2, case_insensitive=True, engine="auto").collect()
-    want2 = extract_mentions(t2, pats2, case_insensitive=True, engine="regex").collect()
-    assert [(r["start"], r["end"]) for r in got2] == [(r["start"], r["end"]) for r in want2]
-
-
 def test_gazetteer_matches_regex_on_golden_aliases(spark):
-    """The distributed join gazetteer reproduces the regex engine exactly
-    over the golden alias list on synthetic transcripts."""
+    """The distributed join gazetteer reproduces the in-row Aho-Corasick
+    extractor exactly over the golden alias list on synthetic transcripts."""
     from spacy_ann_linker_spark.data import golden_kb
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions_gazetteer
 
     turns = generate_transcripts(spark, 300)
     aliases = golden_kb.load_aliases(spark).select("alias")
     pats = [r["alias"] for r in aliases.collect()]
     want = {
         (r["conv_id"], r["turn_idx"], r["start"], r["end"], r["text"])
-        for r in extract_mentions(turns, pats, engine="regex").collect()
+        for r in extract_mentions(turns, pats).collect()
     }
     got = {
         (r["conv_id"], r["turn_idx"], r["start"], r["end"], r["text"])
@@ -159,7 +92,6 @@ def test_gazetteer_40k_alias_kb_bounded(spark):
 
     from spacy_ann_linker_spark.data.synthetic_kb import generate_kb
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions_gazetteer
 
     _, aliases = generate_kb(spark, 20_000)  # 2 aliases per entity
     alias_names = aliases.select("alias")
@@ -169,7 +101,7 @@ def test_gazetteer_40k_alias_kb_bounded(spark):
     gaz_sec = time.perf_counter() - t0
     pats = [r["alias"] for r in alias_names.collect()]
     t0 = time.perf_counter()
-    want = extract_mentions(turns, pats, engine="ac").count()
+    want = extract_mentions(turns, pats).count()
     ac_sec = time.perf_counter() - t0
     assert got == want
     assert gaz_sec < 120 and ac_sec < 120  # bounded even on a throttled host
@@ -180,8 +112,6 @@ def test_gazetteer_salted_join_equals_broadcast_on_hot_first_word(spark):
     share the first word "The" — the exact shape that funnels one join key
     to one reducer. The salted non-broadcast plan must replicate the alias
     side across buckets and return EXACTLY the broadcast path's mentions."""
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions_gazetteer
-
     hot = [f"The topic {i}" for i in range(50)]
     cold = [f"subject{i} matter" for i in range(50)]
     aliases = spark.createDataFrame([(a,) for a in hot + cold], "alias string")
@@ -214,9 +144,8 @@ def test_gazetteer_salted_join_equals_broadcast_on_hot_first_word(spark):
 
 def test_gazetteer_punctuation_aliases_match_regex(spark):
     """Aliases starting/ending with non-word chars (.NET, C++) and nested
-    word-boundary traps (ML inside HTML) behave identically across engines."""
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions_gazetteer
-
+    word-boundary traps (ML inside HTML) behave identically in both
+    extractors."""
     t = spark.createDataFrame(
         [("c1", 0, "user", "use C++ and .NET and Neuro-linguistic programming today", "", None),
          ("c1", 1, "user", "nested ML in HTML but plain ML works; (ML) too", "", None)],
@@ -228,7 +157,7 @@ def test_gazetteer_punctuation_aliases_match_regex(spark):
     pats = ["C++", ".NET", "Neuro-linguistic programming", "ML"]
     want = sorted(
         (r["turn_idx"], r["start"], r["text"])
-        for r in extract_mentions(t, pats, engine="regex").collect()
+        for r in extract_mentions(t, pats).collect()
     )
     got = sorted(
         (r["turn_idx"], r["start"], r["text"])
@@ -237,34 +166,86 @@ def test_gazetteer_punctuation_aliases_match_regex(spark):
     assert want == got and len(want) == 6
 
 
-def test_ac_find_spans_matches_regex_property():
-    """Property: the pure-python AC matcher (find_spans_ac) and the regex
-    scanner produce identical spans for arbitrary pattern sets and texts
-    over a small alphabet (dense overlaps, shared prefixes/suffixes,
-    boundary collisions)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from spacy_ann_linker_spark.mentions.extract import (
-        AhoCorasick,
-        _compile,
-        find_spans,
-        find_spans_ac,
+def test_gazetteer_unicode_aliases_match_extract_mentions(spark):
+    """Aliases whose first word has non-ASCII letters (accents, umlauts,
+    Devanagari with its combining vowel signs) join in the gazetteer
+    exactly as the in-row matcher finds them. The one pinned divergence:
+    an alias with no word character ("++") is matched in-row but has no
+    first word for the gazetteer to join on."""
+    texts = [
+        "Café Society met Élan Vital",
+        "in Zürich: Über alles!",
+        "NLP and हिन्दी and C ++ here",
+    ]
+    t = spark.createDataFrame(
+        [("c1", i, "user", s, "", None) for i, s in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
+    pats = ["Café Society", "Élan Vital", "Zürich", "Über alles", "NLP", "हिन्दी", "++"]
+    aliases = spark.createDataFrame([(p,) for p in pats], "alias string")
+    in_row = sorted(
+        (r["turn_idx"], r["start"], r["end"], r["text"])
+        for r in extract_mentions(t, pats).collect()
+    )
+    gaz = sorted(
+        (r["turn_idx"], r["start"], r["end"], r["text"])
+        for r in extract_mentions_gazetteer(t, aliases).collect()
+    )
+    assert [m[3] for m in in_row] == pats
+    assert gaz == [m for m in in_row if m[3] != "++"]
 
-    word = st.text(alphabet="ab_ ", min_size=1, max_size=6)
-    texts = st.text(alphabet="ab_ .x", max_size=40)
 
-    @settings(max_examples=300, deadline=None)
-    @given(pats=st.lists(word, min_size=1, max_size=8), text=texts, ci=st.booleans())
-    def check(pats, text, ci):
-        pats = [p for p in pats if p.strip()]
-        if not pats:
-            return
-        rx = _compile(pats, ci)
-        ac = AhoCorasick(pats, ci)
-        want = find_spans(text, rx, None)
-        got = find_spans_ac(text, ac, None)
-        assert got == want, (pats, text, ci)
+def _regex_spans(text, pats):
+    """Oracle for the in-row matcher: EntityRuler-style verbatim phrase match
+    as one longest-first regex alternation with word-boundary lookarounds,
+    scanned left to right (leftmost-longest, non-overlapping)."""
+    body = "|".join(re.escape(p) for p in sorted(set(pats), key=len, reverse=True))
+    rx = re.compile(rf"(?<!\w)(?:{body})(?!\w)")
+    return [
+        {"text": m.group(0), "start": m.start(), "end": m.end(), "label": None}
+        for m in rx.finditer(text)
+    ]
 
-    check()
+
+def test_ac_engine_matches_regex(spark):
+    """extract_mentions (Aho-Corasick in a pandas UDF) returns the regex
+    oracle's spans, in order, on text exercising boundaries, overlaps,
+    longest-wins and repeats."""
+    texts = [
+        "NLP and machine learning beat HTML ML parsing; ML!",
+        "machine learning machine learninging learning machine",
+        "(NLP) ML-ops nlp NLP2 2NLP NLP",
+        "",
+        "no mentions at all here",
+    ]
+    t = spark.createDataFrame(
+        [("c1", i, "user", s, "", None) for i, s in enumerate(texts)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    pats = ["NLP", "ML", "machine learning", "learning machine", "machine"]
+    want = [
+        (i, m["text"], m["start"], m["end"])
+        for i, s in enumerate(texts)
+        for m in _regex_spans(s, pats)
+    ]
+    got = [
+        (r["turn_idx"], r["text"], r["start"], r["end"])
+        for r in extract_mentions(t, pats).orderBy("turn_idx", "start").collect()
+    ]
+    assert want == got and len(want) > 5
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    pats=st.lists(st.text(alphabet="ab_ ", min_size=1, max_size=6), min_size=1, max_size=8),
+    text=st.text(alphabet="ab_ .x", max_size=40),
+)
+def test_ac_find_spans_matches_regex_property(pats, text):
+    """Property: the Aho-Corasick matcher (find_spans_ac) returns the regex
+    oracle's spans for arbitrary pattern sets and texts over a small
+    alphabet (dense overlaps, shared prefixes/suffixes, boundary
+    collisions)."""
+    pats = [p for p in pats if p.strip()]
+    if not pats:
+        return
+    assert find_spans_ac(text, AhoCorasick(pats), None) == _regex_spans(text, pats), (pats, text)
