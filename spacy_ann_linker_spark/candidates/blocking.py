@@ -426,7 +426,7 @@ def generate_candidates_blocked(
 
     Same output contract as generate_candidates; recall < 1 by construction
     (tunable), verified >= the threshold-relevant region in tests."""
-    from spacy_ann_linker_spark.candidates.generate import _sims_blocked
+    from spacy_ann_linker_spark.candidates.generate import _sims_blocked, tie_key
     from spacy_ann_linker_spark.link.linker import _register_memo
 
     texts = _register_memo(texts.select("text").distinct().persist())
@@ -440,6 +440,6 @@ def generate_candidates_blocked(
     )
 
     sims = _sims_blocked(model, rest, num_hashes, bands, prefix_len, prefix_salt_buckets)
-    w = Window.partitionBy("text").orderBy(F.desc("similarity"), F.asc("alias"))
+    w = Window.partitionBy("text").orderBy(tie_key().desc(), F.asc("alias"))
     topk = sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= F.lit(k))
     return short.unionByName(topk)

@@ -20,7 +20,11 @@ Reference behaviors preserved:
     entirely ("bypass replaces", candidate_generator.py:257-259)
   * J3 similarity = cosine (nmslib 1.0 - cosine-distance, :266-271)
   * T1 top-k, k=5 default (:37), ordered by similarity desc; ties broken by
-    alias asc for determinism (nmslib tie order is unspecified)
+    alias asc for determinism (nmslib tie order is unspecified). The order
+    compares `tie_key(similarity)`, not the raw double: the cosine is a sum
+    whose last bit follows the summation order, i.e. the partitioning, so
+    mathematically equal cosines (word permutations of one alias share one
+    char_wb gram set) would otherwise rank by the physical plan
   * J5 exact-alias fast path (ann_kb.py:244-259) as an opt-in flag: at scale
     most mentions are verbatim aliases and skip the expensive join
 """
@@ -37,6 +41,14 @@ from spacy_ann_linker_spark.vectorize import tfidf
 from spacy_ann_linker_spark.vectorize.tfidf import TfidfModel
 
 DEFAULT_K = 5  # candidate_generator.py:37; AnnKnowledgeBase uses k=1 (ann_kb.py:24)
+TIE_DIGITS = 12  # summation-order noise is ~1e-16; cosines are in [0, 1]
+
+
+def tie_key(similarity: str = "similarity"):
+    """The similarity as the candidate order sees it: rounded, so cosines
+    equal up to summation-order noise tie and fall through to alias asc.
+    The emitted `similarity` column stays raw."""
+    return F.round(F.col(similarity), TIE_DIGITS)
 
 
 @dataclass
@@ -259,7 +271,7 @@ def generate_candidates(
     distinct string is scored once no matter how many billions of turns
     repeat it."""
     short, exact, sims = _candidate_branches(model, texts, exact_fast_path)
-    w = Window.partitionBy("text").orderBy(F.desc("similarity"), F.asc("alias"))
+    w = Window.partitionBy("text").orderBy(tie_key().desc(), F.asc("alias"))
     topk = (
         sims.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.lit(k))
@@ -301,7 +313,7 @@ def generate_best_candidates(
         .agg(
             F.min_by(
                 F.struct("alias", "similarity"),
-                F.struct((-F.col("similarity")).alias("s"), F.col("alias").alias("a")),
+                F.struct((-tie_key()).alias("s"), F.col("alias").alias("a")),
             ).alias("_b")
         )
         .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))

@@ -102,3 +102,60 @@ def test_topk_matches_numpy_order(spark, golden_model):
         best_sim = max(s for (qq, _), s in want.items() if qq == q)
         got_best = [r for r in cands if r["text"] == t and r["rank"] == 1]
         assert got_best and got_best[0]["similarity"] == pytest.approx(best_sim, abs=1e-9)
+
+
+def test_permuted_alias_ties_break_alias_asc_under_any_partitioning(spark):
+    """Word permutations of one alias ("Argon Lambda Krypton" / "Krypton
+    Argon Lambda") share one char_wb gram set, so their cosines are
+    mathematically equal; the engine's raw sums differ in the last bit by
+    summation order, which follows the shuffle partitioning. The documented
+    alias-asc tie-break must win regardless: best candidate == rank 1 ==
+    the alias-asc minimum of the oracle's tied set, at two partition counts."""
+    import itertools
+
+    from spacy_ann_linker_spark.candidates.generate import (
+        CandidateModel,
+        generate_best_candidates,
+    )
+
+    groups = [
+        ("Argon", "Lambda", "Krypton"), ("Helium", "Boron", "Sigma"),
+        ("Xenon", "Radon", "Omega"), ("Delta", "Neon", "Cobalt"),
+        ("Argon", "Sigma", "Cobalt"), ("Boron", "Omega", "Lambda"),
+    ]
+    aliases = sorted({" ".join(p) for g in groups for p in itertools.permutations(g)})
+    texts = sorted(
+        {" ".join(g).replace("o", "q", 1) for g in groups}
+        | {" ".join(g) + " Neon" for g in groups}
+    )
+    alias_df = spark.createDataFrame([(a,) for a in aliases], "alias string")
+    vocab = tfidf.fit(alias_df, "alias", "alias", min_df=1)
+    model = CandidateModel(
+        tfidf=vocab,
+        alias_vectors=tfidf.transform(vocab, alias_df, "alias", "alias"),
+        short_aliases=alias_df.filter(F.lit(False)),
+        aliases=alias_df,
+    )
+    oracle = _numpy_cosines([(a, a) for a in aliases], [(t, t) for t in texts], min_df=1)
+    want = {}
+    for t in texts:
+        top = max(s for (q, _), s in oracle.items() if q == t)
+        tied = [a for (q, a), s in oracle.items() if q == t and abs(s - top) < 1e-9]
+        assert len(tied) == 6, (t, tied)  # the best is a whole permutation group
+        want[t] = min(tied)
+
+    q_df = spark.createDataFrame([(t,) for t in texts], "text string")
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            best = {r["text"]: r["alias"] for r in generate_best_candidates(model, q_df).collect()}
+            rank1 = {
+                r["text"]: r["alias"]
+                for r in generate_candidates(model, q_df, k=3).collect()
+                if r["rank"] == 1
+            }
+            assert best == want, (n, {t: (best[t], want[t]) for t in texts if best[t] != want[t]})
+            assert rank1 == want, (n, {t: (rank1[t], want[t]) for t in texts if rank1[t] != want[t]})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
