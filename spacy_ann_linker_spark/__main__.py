@@ -55,7 +55,6 @@ def cmd_link(args) -> int:
         fuzzy_rescue=not args.no_rescue,
         use_blocking=args.blocking,
         max_gram_df=args.max_gram_df,
-        truncate_memos=True if args.truncate_memos else None,
         broadcast_exact_aliases=not args.no_broadcast,
         broadcast_entity_vectors=not args.no_broadcast,
         broadcast_rescue_aliases=not args.no_broadcast,
@@ -141,9 +140,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="materialize memos via reliable parquet "
                          "write+read under this dir instead of "
                          "localCheckpoint (executor-loss-safe)")
-    lk.add_argument("--truncate-memos", action="store_true", dest="truncate_memos",
-                    help="force memo lineage truncation (recommended >= 1M turns; "
-                         "the blocked path truncates by default)")
     lk.add_argument("--cores", type=int, default=4)
     lk.set_defaults(fn=cmd_link)
 

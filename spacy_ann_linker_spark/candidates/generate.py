@@ -194,24 +194,23 @@ def _candidate_branches(
     use_blocking: bool = False,
     max_gram_df: int | None = None,
     broadcast_exact_aliases: bool = True,
-) -> tuple[DataFrame, DataFrame | None, DataFrame]:
-    """Shared branch plumbing: (short-bypass rows, exact-fast-path rows or
-    None, raw similarity rows). Branches are disjoint by text (each anti-join
-    removes the previous branch's population — U1 "bypass replaces"
-    semantics, candidate_generator.py:253-275)."""
+    memo_checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame]:
+    """Shared branch plumbing: (distinct-texts memo, short-bypass rows,
+    exact-fast-path rows or None, raw similarity rows). Branches are
+    disjoint by text (each anti-join removes the previous branch's
+    population — U1 "bypass replaces" semantics,
+    candidate_generator.py:253-275)."""
     # distinct mention strings feed three branches (short join, anti-join,
-    # vectorize) — persist AND materialize eagerly: a lazy persist is
-    # populated mid-job, so concurrent consumers in the same query would
-    # each recompute the dedup shuffle (measured 2-3x recompute). The table
-    # is distinct-mention-sized, so the extra count() action is noise.
-    texts = texts.select("text").distinct().persist()
-    texts.count()
-    # register for release_memos: long-running callers (serve loop,
-    # streaming foreachBatch) would otherwise accumulate one cached
-    # distinct-mention table per link call until driver GC
-    from spacy_ann_linker_spark.link.linker import _register_memo
+    # vectorize) — materialize eagerly: a lazy persist is populated mid-job,
+    # so concurrent consumers in the same query would each recompute the
+    # dedup shuffle (measured 2-3x recompute). Cut like every link memo
+    # (see link/linker.py:_materialize_memo) and registered for release.
+    from spacy_ann_linker_spark.link.linker import _materialize_memo
 
-    _register_memo(texts)
+    texts = _materialize_memo(
+        texts.select("text").distinct(), truncate=True, reliable_dir=memo_checkpoint_dir
+    )
 
     # J4 short-alias bypass (exact, case-sensitive, total)
     short_df = model.short_aliases
@@ -254,7 +253,7 @@ def _candidate_branches(
         if use_blocking
         else _sims_exact(model, rest, max_gram_df=max_gram_df)
     )
-    return short, exact, sims
+    return texts, short, exact, sims
 
 
 def generate_candidates(
@@ -270,7 +269,7 @@ def generate_candidates(
     of the reference's mention->alias memo table (ann_linker.py:94-97): each
     distinct string is scored once no matter how many billions of turns
     repeat it."""
-    short, exact, sims = _candidate_branches(model, texts, exact_fast_path)
+    _, short, exact, sims = _candidate_branches(model, texts, exact_fast_path)
     w = Window.partitionBy("text").orderBy(tie_key().desc(), F.asc("alias"))
     topk = (
         sims.withColumn("rank", F.row_number().over(w))
@@ -300,7 +299,7 @@ def generate_best_candidates(
     use_blocking routes the similarity branch through the LSH + sorted-
     neighborhood pair join (bounded at any scale); max_gram_df caps hot-gram
     posting lists on the exact join. Both default off = reference-exact."""
-    short, exact, sims = _candidate_branches(
+    _, short, exact, sims = _candidate_branches(
         model,
         texts,
         exact_fast_path,
@@ -308,6 +307,13 @@ def generate_best_candidates(
         max_gram_df=max_gram_df,
         broadcast_exact_aliases=broadcast_exact_aliases,
     )
+    return _best_of_branches(short, exact, sims)
+
+
+def _best_of_branches(
+    short: DataFrame, exact: DataFrame | None, sims: DataFrame
+) -> DataFrame:
+    """The per-text argmax over _candidate_branches' disjoint branches."""
     best_sim = (
         sims.groupBy("text")
         .agg(

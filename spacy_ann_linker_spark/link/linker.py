@@ -30,7 +30,8 @@ from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.candidates.generate import (
     CandidateModel,
-    generate_best_candidates,
+    _best_of_branches,
+    _candidate_branches,
 )
 from spacy_ann_linker_spark.kb.build import KnowledgeBase
 from spacy_ann_linker_spark.link.embedding import (
@@ -86,6 +87,16 @@ def _release_list(memos: list) -> int:
             n += 1
         except Exception:
             pass
+        # the localCheckpoint blocks under the cache layer: unpersisting the
+        # DataFrame frees only the InMemoryRelation, and the checkpoint RDD
+        # otherwise waits for driver GC + ContextCleaner — one leaked RDD
+        # per memo per serve request / stream micro-batch
+        rdd = getattr(df, "_memo_checkpoint_rdd", None)
+        if rdd is not None:
+            try:
+                rdd.unpersist(False)
+            except Exception:
+                pass
         # reliable (parquet-backed) memos: delete the backing directory —
         # long-running serve loops / streaming foreachBatch otherwise grow
         # memo_checkpoint_dir unboundedly (one memo_<uuid> dir per memo per
@@ -116,44 +127,49 @@ def memo_scope():
 def _materialize_memo(
     df: DataFrame, truncate: bool, reliable_dir: str | None = None
 ) -> DataFrame:
-    """Materialize a memo table eagerly; optionally cut its lineage first.
+    """Materialize a memo table eagerly and cut its lineage.
 
-    reliable_dir (the documented localCheckpoint swap point below): when
-    set, the memo is WRITTEN to parquet under a unique subdirectory and read
-    back instead of localCheckpoint — lineage is cut the same way, but the
-    materialized bytes live in the (replicated / re-readable) filesystem
-    rather than unreplicated executor block storage, so an executor loss
-    recomputes from the files instead of failing the query. Costs one
-    write+read round trip per memo; memos are distinct-mention-sized, so at
-    1000-executor scale this is the safe default and the in-memory paths are
-    the latency optimization. The per-memo parquet dirs are deleted by
-    release_memos()/memo_scope() exit (they are request-scoped scratch —
-    long-running serve loops must not grow the dir unboundedly), so like the
-    in-memory variants, a released memo must not be re-executed.
+    Every link memo (distinct mention texts, the pre-rescue best aliases,
+    mention_alias_map) comes through here with truncate=True: an eager
+    localCheckpoint, then persist()+count() on top. The InMemoryRelation
+    layered over the checkpoint scan restores size stats and columnar scans
+    (a bare LogicalRDD reports unknown size — measured +45 CPU-s from lost
+    broadcast decisions).
 
-    persist()+count() (truncate=False) is the default: columnar cache +
-    measured-size stats, so Catalyst keeps broadcasting the memo into the
-    downstream joins. That is NOT enough when the plan behind the memo is
-    pathologically deep — the blocked path's candidate union (LSH pair join x
-    sorted-neighborhood x rescue, each wrapping its own finished AQE subtree)
-    serializes into EVERY downstream task binary: measured on the bench
-    input, ~0.5 s/task of task-binary deserialization and >100 s/stage of GC,
-    a 20-70 s link with huge run-to-run variance. truncate=True inserts an
-    eager localCheckpoint BEFORE the persist: downstream tasks then carry
-    only a checkpoint-scan lineage (stable ~12 s same input), and the
-    InMemoryRelation layered on top restores stats + columnar scans (a bare
-    LogicalRDD reports unknown size — measured +45 CPU-s from lost broadcast
-    decisions). The exact path keeps truncate=False: its plan is shallow, and
-    the extra checkpoint materialization pass measurably costs more than it
-    saves (~9 s -> ~12-16 s on the bench link).
+    Why every memo is cut: an uncut cached memo embeds the plan of the memo
+    before it, so the link output's plan nests one copy of each upstream
+    memo plan inside the next. AQE re-renders that whole description after
+    every query stage (AdaptiveSparkPlanExec.onUpdatePlan ->
+    QueryExecution.explainString) and posts it to the listener bus, which
+    keeps it. On the 4,000-turn transcripts benchmark the output plan's
+    formatted description was 8.57 M characters with 2,164 InMemoryRelations
+    (5.88 M / 1,243 on kb_scale); about half of the driver-thread samples of
+    a warm link call sat in that rendering. Cut, it is ~125 k / ~70 k. The
+    deep blocked plan (LSH pair join x sorted-neighborhood x rescue, each
+    wrapping its own finished AQE subtree) additionally serialized into every
+    downstream task binary: ~0.5 s/task of deserialization and >100 s/stage
+    of GC, a 20-70 s link with huge variance, stable at ~12 s once cut. The
+    checkpoint pass costs one extra job per memo; that is far less than
+    the rendering it saves (see CHANGES.md for the interleaved A/B).
 
-    Cluster note: localCheckpoint blocks are unreplicated — an executor loss
-    mid-job fails the query instead of recomputing. For a 1000-executor run
-    either accept the retry (memos are distinct-mention-sized and cheap to
-    rebuild) or pass reliable_dir — the explicit write-to-table swap this
-    docstring previously only pointed at (same swap point as
-    plans/checkpoint.py documents for Iceberg)."""
-    memo_path = None
+    truncate=False (persist()+count() only) is the opt-out behind
+    `truncate_memos=False`; it keeps the nested plans.
+
+    reliable_dir: when set, the memo is WRITTEN to parquet under a unique
+    subdirectory and read back instead of localCheckpoint — lineage is cut
+    the same way, but the materialized bytes live in the (replicated /
+    re-readable) filesystem rather than unreplicated executor block storage,
+    so an executor loss recomputes from the files instead of failing the
+    query. Costs one write+read round trip per memo; memos are
+    distinct-mention-sized, so at 1000-executor scale this is the safe
+    default and localCheckpoint is the latency optimization (the same swap
+    point plans/checkpoint.py documents for Iceberg).
+
+    release_memos()/memo_scope() exit frees everything a memo holds: the
+    cache, the checkpoint blocks and the parquet dir (request-scoped scratch
+    — long-running serve loops must not grow it). A released memo must not
+    be re-executed."""
+    memo_path = checkpoint_rdd = None
     if reliable_dir is not None:
         import uuid
 
@@ -162,19 +178,21 @@ def _materialize_memo(
         df = df.sparkSession.read.parquet(memo_path)
     elif truncate:
         df = df.localCheckpoint(eager=True)
+        # the LogicalRDD's RDD holds the checkpoint blocks
+        checkpoint_rdd = df._jdf.queryExecution().analyzed().rdd()
     out = df.persist()
     out.count()
-    if memo_path is not None:
-        # remembered so release_memos/memo_scope exit deletes the files —
-        # reliable memos are per-request scratch, not caller-owned output
-        out._memo_parquet_path = memo_path
+    # remembered so release_memos/memo_scope exit frees them — memos are
+    # per-request scratch, not caller-owned output
+    out._memo_parquet_path = memo_path
+    out._memo_checkpoint_rdd = checkpoint_rdd
     return _register_memo(out)
 
 
 def release_memos() -> int:
     """Release every memo table registered since the last release: unpersist
-    cached ones and drop the reference so ContextCleaner can free
-    localCheckpoint blocks. Safe to call any time AFTER the linking output
+    the cache, free the checkpoint blocks and delete reliable memo dirs.
+    Safe to call any time AFTER the linking output
     has been materialized (collect/write); returns the number released.
     Inside a memo_scope() this releases the scope's own memos only (the
     scope also auto-releases on exit, so explicit calls there are
@@ -220,38 +238,44 @@ def best_aliases(
 
     broadcast_exact_aliases: same knob for the J5 exact-fast-path alias
     table (generate.py _candidate_branches) — False switches the verbatim
-    lookup to shuffle joins for gazetteers too big to broadcast."""
-    # global argmax == rank-1 of top-k for any k, so the linking path skips
-    # the top-k sort window entirely (hash aggregations only); strict >
-    # threshold applied after, same as filtering the k-list then taking [0].
-    # use_blocking / max_gram_df (both off = reference-exact) bound the
-    # similarity join at scale: LSH+prefix pair blocking, or hot-gram df-cap.
-    best = generate_best_candidates(
+    lookup to shuffle joins for gazetteers too big to broadcast.
+
+    truncate_memos: None (default) or True cuts the pre-rescue memo's
+    lineage; False keeps it (see link_mentions)."""
+    # generate_best_candidates, inlined to keep its distinct-texts memo: the
+    # rescue below anti-joins against that memo instead of re-running the
+    # mention source (a cut memo is a checkpoint scan, so Spark's cache
+    # substitution cannot map a recomputed distinct onto it). Global argmax
+    # == rank-1 of top-k for any k, so the linking path skips the top-k sort
+    # window entirely (hash aggregations only); strict > threshold applied
+    # after, same as filtering the k-list then taking [0]. use_blocking /
+    # max_gram_df (both off = reference-exact) bound the similarity join at
+    # scale: LSH+prefix pair blocking, or hot-gram df-cap.
+    texts, short, exact, sims = _candidate_branches(
         model,
         texts,
-        exact_fast_path=exact_fast_path,
+        exact_fast_path,
         use_blocking=use_blocking,
         max_gram_df=max_gram_df,
         broadcast_exact_aliases=broadcast_exact_aliases,
-    ).filter(F.col("similarity") > F.lit(threshold))
+        memo_checkpoint_dir=memo_checkpoint_dir,
+    )
+    best = _best_of_branches(short, exact, sims).filter(
+        F.col("similarity") > F.lit(threshold)
+    )
     if not fuzzy_rescue:
         return best
     # the pre-rescue result feeds both the anti-join and the union —
     # materialize eagerly (both consumers run concurrently in the final job;
     # lazy evaluation recomputed the whole candidate-join subtree, measured
-    # ~3x wall); lineage truncation where the plan is deep enough to bloat
-    # task binaries — default: the blocked path (see _materialize_memo; at
-    # >= 10^6-turn inputs truncation stabilizes the exact path too, pass
-    # truncate_memos=True)
-    if truncate_memos is None:
-        truncate_memos = use_blocking
+    # ~3x wall) and cut its lineage like every memo (see _materialize_memo)
     best = _materialize_memo(
-        best, truncate=truncate_memos, reliable_dir=memo_checkpoint_dir
+        best, truncate=truncate_memos is not False, reliable_dir=memo_checkpoint_dir
     )
 
     from spacy_ann_linker_spark.functions.stringsim import jaro_winkler_udf
 
-    unmatched = texts.select("text").distinct().join(best, "text", "left_anti")
+    unmatched = texts.join(best, "text", "left_anti")
     aliases = model.aliases.select(
         "alias",
         F.lower(F.substring("alias", 1, 1)).alias("_bk"),
@@ -374,10 +398,10 @@ def link_mentions(
     gold mention spans supplied and fuzzy_rescue off, the whole link plan is
     then Python-free.
 
-    truncate_memos: None (default) = truncate memo lineage on the blocked
-    path only; True forces truncation (recommended at >= 10^6-turn inputs,
-    where the untruncated exact-path memo plan intermittently pays the same
-    task-binary/GC tax — see _materialize_memo); False never truncates.
+    truncate_memos: None (default) or True cuts the lineage of every memo
+    (see _materialize_memo); False keeps mention_alias_map and the
+    pre-rescue memo uncut, the only opt-out (the distinct-texts memo is
+    always cut).
 
     broadcast_exact_aliases / broadcast_entity_vectors: True (default) is
     right for every KB that fits one executor; False is the 100M-entity
@@ -398,17 +422,12 @@ def link_mentions(
     unannotated, ann_linker.py:90-91)."""
     texts = mentions.select("text").distinct()
     # mention_alias_map is tiny (distinct mention strings) but its lineage is
-    # the whole candidate-generation DAG — materialize eagerly (and, on the
-    # blocked path, truncate: see _materialize_memo) so the downstream
-    # consumers (candidate expansion, turns semi-join) scan the materialized
-    # blocks instead of recomputing the similarity join or dragging its plan
-    # into every task binary (J8 memo semantics)
-    want_truncate = use_blocking if truncate_memos is None else truncate_memos
-    # with fuzzy_rescue on, best_aliases already cut the deep candidate
-    # subtree at its OWN pre-rescue memo; what remains above it (anti-join +
-    # broadcast JW rescue + union) is shallow, so a second eager
-    # localCheckpoint pass here would only re-materialize bytes the persist
-    # below captures anyway
+    # the whole candidate-generation DAG — materialize eagerly and cut it
+    # (see _materialize_memo), so the downstream consumers (candidate
+    # expansion, turns semi-join) scan the materialized blocks instead of
+    # recomputing the similarity join, dragging its plan into every task
+    # binary, or nesting it into the output plan AQE re-renders after every
+    # stage (J8 memo semantics)
     mam = _materialize_memo(
         best_aliases(
             model,
@@ -424,7 +443,7 @@ def link_mentions(
             broadcast_exact_aliases=broadcast_exact_aliases,
             memo_checkpoint_dir=memo_checkpoint_dir,
         ),
-        truncate=want_truncate and not fuzzy_rescue,
+        truncate=truncate_memos is not False,
         reliable_dir=memo_checkpoint_dir,
     )
 

@@ -42,18 +42,78 @@ def test_tfidf_transform_broadcasts_vocab(spark, golden_model):
     assert "BroadcastHashJoin" in plan
 
 
-def test_link_plan_has_no_cartesian_product(spark, golden_model):
+def _golden_links(spark, golden_model, **kw):
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
-    from spacy_ann_linker_spark.pipeline import link_transcripts
     from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from spacy_ann_linker_spark.pipeline import link_transcripts
 
     turns = generate_transcripts(spark, 32)
     mentions = extract_mentions(turns, ["Research", "ML"])
-    links = link_transcripts(golden_model, turns, mentions=mentions, fuzzy_rescue=True)
-    plan = _plan(links)
+    return link_transcripts(golden_model, turns, mentions=mentions, fuzzy_rescue=True, **kw)
+
+
+def test_link_plan_has_no_cartesian_product(spark, golden_model):
+    plan = _plan(_golden_links(spark, golden_model))
     assert "CartesianProduct" not in plan
     # entity-vector dimension join is broadcast (linker.py broadcasts evecs)
     assert "BroadcastHashJoin" in plan
+
+
+def test_link_plan_does_not_nest_memo_plans(spark, golden_model):
+    """Every link memo is cut, so the output plan holds each memo once as a
+    checkpoint scan instead of nesting every upstream memo's plan inside
+    the next. AQE re-renders this description after every query stage; the
+    nested form was 62 InMemoryRelations (811 k characters) here against 4
+    (35 k) cut, and 8.57 M characters on a 4,000-turn input."""
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    with memo_scope():
+        plan = _plan(_golden_links(spark, golden_model))
+    assert plan.count("InMemoryRelation") <= 16, (plan.count("InMemoryRelation"), len(plan))
+
+
+def test_link_memos_read_the_turns_once(spark, golden_model):
+    """Building the link memos scans the turn source exactly once: the JW
+    rescue must anti-join against the distinct-texts memo, not recompute
+    the distinct (and with it mention extraction) from the source — a cut
+    memo is a checkpoint scan, which Spark's cache substitution cannot match
+    a recomputed plan against."""
+    from spacy_ann_linker_spark.data.transcripts import generate_transcripts
+    from spacy_ann_linker_spark.link.linker import memo_scope
+    from spacy_ann_linker_spark.pipeline import link_transcripts
+
+    turns = generate_transcripts(spark, 64)
+    rows = turns.collect()
+    reads = spark.sparkContext.accumulator(0)
+
+    def tap(row):
+        reads.add(1)
+        return row
+
+    source = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4).map(tap), turns.schema)
+    with memo_scope():
+        link_transcripts(golden_model, source, fuzzy_rescue=True)
+        assert reads.value == len(rows)
+
+
+@pytest.mark.parametrize("use_blocking", [False, True], ids=["exact", "blocked"])
+def test_memo_scope_exit_frees_checkpoint_blocks(spark, golden_model, use_blocking):
+    """Leaving memo_scope() frees everything its memos hold — the cache AND
+    the localCheckpoint blocks underneath — so a serve loop or a stream's
+    micro-batches do not accumulate one persisted RDD per memo per call."""
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    jsc = spark.sparkContext._jsc
+
+    def call():
+        with memo_scope():
+            _golden_links(spark, golden_model, use_blocking=use_blocking).collect()
+
+    call()  # first use materializes the model's lazily cached tables
+    before = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        call()
+        assert jsc.getPersistentRDDs().size() == before
 
 
 def test_candidate_join_partial_aggregates(spark, golden_model):
@@ -88,12 +148,13 @@ def test_gazetteer_plan_broadcasts_aliases_no_cartesian(spark):
 
 
 def test_memo_lineage_truncation(spark):
-    """The blocked-path memo tables must cut lineage (eager localCheckpoint
-    under the cache) so the deep LSH/rescue plan never serializes into every
-    downstream task binary — measured 20-70 s links with >100 s/stage GC
-    without it. The exact path must NOT pay the extra checkpoint pass, and
-    both variants need an InMemoryRelation on top (a bare LogicalRDD loses
-    size stats and with them the downstream broadcast decisions)."""
+    """Link memo tables cut lineage (eager localCheckpoint under the cache)
+    so no memo's plan nests into the next one's or serializes into every
+    downstream task binary — measured 20-70 s blocked links with
+    >100 s/stage GC without it. The truncate_memos=False opt-out must keep
+    the plain cache with no checkpoint pass, and both variants need an
+    InMemoryRelation on top (a bare LogicalRDD loses size stats and with
+    them the downstream broadcast decisions)."""
     from pyspark.sql import functions as F
 
     from spacy_ann_linker_spark.link.linker import _materialize_memo, release_memos
