@@ -44,11 +44,11 @@ DEFAULT_K = 5  # candidate_generator.py:37; AnnKnowledgeBase uses k=1 (ann_kb.py
 TIE_DIGITS = 12  # summation-order noise is ~1e-16; cosines are in [0, 1]
 
 
-def tie_key(similarity: str = "similarity"):
+def tie_key():
     """The similarity as the candidate order sees it: rounded, so cosines
     equal up to summation-order noise tie and fall through to alias asc.
     The emitted `similarity` column stays raw."""
-    return F.round(F.col(similarity), TIE_DIGITS)
+    return F.round(F.col("similarity"), TIE_DIGITS)
 
 
 @dataclass

@@ -141,16 +141,18 @@ def _materialize_memo(
     memo plan inside the next. AQE re-renders that whole description after
     every query stage (AdaptiveSparkPlanExec.onUpdatePlan ->
     QueryExecution.explainString) and posts it to the listener bus, which
-    keeps it. On the 4,000-turn transcripts benchmark the output plan's
+    keeps it. On perfbench's 4,000-turn transcripts input the output plan's
     formatted description was 8.57 M characters with 2,164 InMemoryRelations
-    (5.88 M / 1,243 on kb_scale); about half of the driver-thread samples of
-    a warm link call sat in that rendering. Cut, it is ~125 k / ~70 k. The
-    deep blocked plan (LSH pair join x sorted-neighborhood x rescue, each
-    wrapping its own finished AQE subtree) additionally serialized into every
-    downstream task binary: ~0.5 s/task of deserialization and >100 s/stage
-    of GC, a 20-70 s link with huge variance, stable at ~12 s once cut. The
-    checkpoint pass costs one extra job per memo; that is far less than
-    the rendering it saves (see CHANGES.md for the interleaved A/B).
+    (5.88 M / 1,243 on kb_scale), and 11 of 24 jstack samples of a warm link
+    call caught the driver in explainString. Cut, it is 123 k / 32 (68 k /
+    15). The deep blocked plan (LSH pair join x sorted-neighborhood x rescue,
+    each wrapping its own finished AQE subtree) additionally serialized into
+    every downstream task binary: ~0.5 s/task of deserialization and
+    >100 s/stage of GC, a 20-70 s link with huge variance, stable at ~12 s
+    once cut. The checkpoint pass adds 2-3 Spark jobs per memo, far less
+    than the rendering it saves: first link call on a 4-core VM, medians of
+    10 interleaved pairs, 130 -> 200 turns/s and 36 -> 22 CPU-s (kb_scale),
+    263 -> 504 turns/s and 48 -> 26 CPU-s (transcripts).
 
     truncate=False (persist()+count() only) is the opt-out behind
     `truncate_memos=False`; it keeps the nested plans.
