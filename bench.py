@@ -283,7 +283,7 @@ def run_bench(cpus: int) -> dict:
     # bounded-worst-case grounds — must be reproducible from BENCH alone.
     # Single-shot timings (the session is already steady-state from the
     # headline legs; a second warmup per leg would double the cost of the
-    # large legs), truncate_memos=True at >= 1M turns per the r3 finding.
+    # large legs).
     crossover: dict = {}
     if not os.environ.get("SPARK_GRAFT_LINK_ONLY") and os.environ.get(
         "SPARK_GRAFT_CROSSOVER", "1"
@@ -318,7 +318,6 @@ def run_bench(cpus: int) -> dict:
                             mentions=mentions_n,
                             fuzzy_rescue=True,
                             use_blocking=blocked_flag,
-                            truncate_memos=True if n >= 1_000_000 else None,
                         )
                     )
                     sec = time.perf_counter() - t0

@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as e
+from bench import _container_cpu_sec
 from spacy_ann_linker_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -41,13 +42,6 @@ BENCH_QUERIES = [
 ]
 
 
-def _cgroup_cpu():
-    try:
-        return float(open("/sys/fs/cgroup/cpuacct/cpuacct.usage").read()) * 1e-9
-    except OSError:
-        return None
-
-
 def main():
     args = [a for a in sys.argv[1:]]
     reps = 1
@@ -65,11 +59,11 @@ def main():
         best_cpu = None
         for _ in range(reps):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            c0 = _cgroup_cpu()
+            c0 = _container_cpu_sec()
             t0 = time.perf_counter()
             qs[name](spark, SF).write.format("noop").mode("overwrite").save()
             sec = time.perf_counter() - t0
-            csec = (_cgroup_cpu() - c0) if c0 is not None else None
+            csec = (_container_cpu_sec() - c0) if c0 is not None else None
             best = sec if best is None else min(best, sec)
             if csec is not None:
                 best_cpu = csec if best_cpu is None else min(best_cpu, csec)

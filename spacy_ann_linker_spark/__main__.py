@@ -55,9 +55,7 @@ def cmd_link(args) -> int:
         fuzzy_rescue=not args.no_rescue,
         use_blocking=args.blocking,
         max_gram_df=args.max_gram_df,
-        broadcast_exact_aliases=not args.no_broadcast,
-        broadcast_entity_vectors=not args.no_broadcast,
-        broadcast_rescue_aliases=not args.no_broadcast,
+        broadcast_kb=not args.no_broadcast,
         memo_checkpoint_dir=args.memo_checkpoint_dir,
     )
     links.write.mode("overwrite").parquet(args.output)

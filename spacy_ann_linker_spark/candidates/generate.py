@@ -193,7 +193,7 @@ def _candidate_branches(
     exact_fast_path: bool,
     use_blocking: bool = False,
     max_gram_df: int | None = None,
-    broadcast_exact_aliases: bool = True,
+    broadcast_kb: bool = True,
     memo_checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame]:
     """Shared branch plumbing: (distinct-texts memo, short-bypass rows,
@@ -208,9 +208,7 @@ def _candidate_branches(
     # (see link/linker.py:_materialize_memo) and registered for release.
     from spacy_ann_linker_spark.link.linker import _materialize_memo
 
-    texts = _materialize_memo(
-        texts.select("text").distinct(), truncate=True, reliable_dir=memo_checkpoint_dir
-    )
+    texts = _materialize_memo(texts.select("text").distinct(), reliable_dir=memo_checkpoint_dir)
 
     # J4 short-alias bypass (exact, case-sensitive, total)
     short_df = model.short_aliases
@@ -224,14 +222,14 @@ def _candidate_branches(
     if exact_fast_path:
         # J5: verbatim (case-folded) alias hits are cosine-1.0 by construction;
         # answer them with a broadcast join and keep them out of the big join.
-        # broadcast_exact_aliases=False (the 100M-alias gazetteer regime,
-        # where a full alias broadcast OOMs driver + executors) runs the same
-        # two joins as shuffles instead: the key is the full case-folded
-        # string — near-unique on both sides (mentions arrive deduped, the
-        # alias table is distinct), so there is no hot key to salt and AQE
-        # sizes the exchange.
+        # broadcast_kb=False (the 100M-alias gazetteer regime, where a full
+        # alias broadcast OOMs driver + executors) runs the same two joins
+        # as shuffles instead: the key is the full case-folded string —
+        # near-unique on both sides (mentions arrive deduped, the alias
+        # table is distinct), so there is no hot key to salt and AQE sizes
+        # the exchange.
         alias_lower = model.aliases.withColumn("_al", F.lower("alias"))
-        _bc = F.broadcast if broadcast_exact_aliases else (lambda df: df)
+        _bc = F.broadcast if broadcast_kb else (lambda df: df)
         exact = (
             rest.withColumn("_tl", F.lower("text"))
             .join(_bc(alias_lower), F.col("_tl") == F.col("_al"), "inner")
@@ -287,7 +285,7 @@ def generate_best_candidates(
     exact_fast_path: bool = False,
     use_blocking: bool = False,
     max_gram_df: int | None = None,
-    broadcast_exact_aliases: bool = True,
+    broadcast_kb: bool = True,
 ) -> DataFrame:
     """texts -> (text, alias, similarity): the single best candidate per
     mention string, computed with hash aggregations (min_by over an ordering
@@ -305,7 +303,7 @@ def generate_best_candidates(
         exact_fast_path,
         use_blocking=use_blocking,
         max_gram_df=max_gram_df,
-        broadcast_exact_aliases=broadcast_exact_aliases,
+        broadcast_kb=broadcast_kb,
     )
     return _best_of_branches(short, exact, sims)
 

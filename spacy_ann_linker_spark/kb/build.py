@@ -27,7 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spacy_ann_linker_spark.link.embedding import embed_texts
+from spacy_ann_linker_spark.link.embedding import DIM, embed_texts
 
 SHORT_ALIAS_MAX_LEN = 4  # strict <: len(alias) < 4 (candidate_generator.py:98)
 
@@ -37,6 +37,7 @@ class KnowledgeBase:
     entities: DataFrame  # id, name, description, label, freq, vector, vnorm
     alias_map: DataFrame  # alias, entity_id, prior, ent_pos
     short_aliases: DataFrame  # alias
+    dim: int  # entity vector length = the linker's context embedding dim
 
     def aliases(self) -> DataFrame:
         """Distinct alias strings — `kb.get_alias_strings()`
@@ -50,11 +51,20 @@ class KnowledgeBase:
 
     @staticmethod
     def load(spark, path: str) -> "KnowledgeBase":
+        entities = spark.read.parquet(f"{path}/kb_entities")
         return KnowledgeBase(
-            entities=spark.read.parquet(f"{path}/kb_entities"),
+            entities=entities,
             alias_map=spark.read.parquet(f"{path}/kb_alias_map"),
             short_aliases=spark.read.parquet(f"{path}/short_aliases"),
+            dim=vector_dim(entities),
         )
+
+
+def vector_dim(entities: DataFrame) -> int:
+    """Entity vector length of a stored KB, read once at load from one
+    row's `size(vector)` (a single limit-1 job); an empty KB gets DIM."""
+    row = entities.filter(F.col("vector").isNotNull()).select(F.size("vector")).first()
+    return DIM if row is None else row[0]
 
 
 def file_order_col():
@@ -132,7 +142,7 @@ def build_alias_map(aliases_df: DataFrame, entities_df: DataFrame) -> DataFrame:
     )
 
 
-def build_kb(entities_df: DataFrame, aliases_df: DataFrame, dim: int = 64) -> KnowledgeBase:
+def build_kb(entities_df: DataFrame, aliases_df: DataFrame, dim: int = DIM) -> KnowledgeBase:
     """Full KB build: dedup entities, embed descriptions, explode aliases."""
     ents = dedup_entities(entities_df).withColumn("freq", F.lit(100))
     vecs = embed_texts(ents.select("id", "description"), "id", "description", dim=dim)
@@ -152,4 +162,4 @@ def build_kb(entities_df: DataFrame, aliases_df: DataFrame, dim: int = 64) -> Kn
         .distinct()
         .filter(F.length("alias") < SHORT_ALIAS_MAX_LEN)
     )
-    return KnowledgeBase(entities=ents, alias_map=alias_map, short_aliases=short)
+    return KnowledgeBase(entities=ents, alias_map=alias_map, short_aliases=short, dim=dim)

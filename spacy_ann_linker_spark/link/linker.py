@@ -10,8 +10,8 @@ One declarative lineage per batch of mentions:
 Reference behaviors preserved:
   * F4 strict `>` threshold, default 0.7 (ann_linker.py:49,81-83)
   * F5 no_description_threshold is DEAD CODE in the reference (a list
-    comprehension whose result is discarded, ann_linker.py:84-88) — kept as a
-    config knob, no operator
+    comprehension whose result is discarded, ann_linker.py:84-88) — no
+    parameter, no operator
   * J8 mention->best-alias memo (`mentions_to_alias_cand`, ann_linker.py:94-97)
     = the `mention_alias_map` DataFrame returned by `best_aliases`
   * J7/T3 disambiguation: cosine(entity_vector, context_vector) with +1e-8
@@ -41,6 +41,8 @@ from spacy_ann_linker_spark.link.embedding import (
 )
 
 DEFAULT_THRESHOLD = 0.7  # ann_linker.py:49
+JW_THRESHOLD = 0.88  # fuzzy-rescue cut, strict >
+RESCUE_SALT_BUCKETS = 16  # salted rescue join fan-out when the KB is not broadcast
 
 # memo tables (mention_alias_map and the pre-rescue candidate set) registered
 # here so long-running callers (the serve loop, streaming foreachBatch) can
@@ -124,16 +126,14 @@ def memo_scope():
         _release_list(memos)
 
 
-def _materialize_memo(
-    df: DataFrame, truncate: bool, reliable_dir: str | None = None
-) -> DataFrame:
+def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> DataFrame:
     """Materialize a memo table eagerly and cut its lineage.
 
     Every link memo (distinct mention texts, the pre-rescue best aliases,
-    mention_alias_map) comes through here with truncate=True: an eager
-    localCheckpoint, then persist()+count() on top. The InMemoryRelation
-    layered over the checkpoint scan restores size stats and columnar scans
-    (a bare LogicalRDD reports unknown size — measured +45 CPU-s from lost
+    mention_alias_map) comes through here: an eager localCheckpoint, then
+    persist()+count() on top. The InMemoryRelation layered over the
+    checkpoint scan restores size stats and columnar scans (a bare
+    LogicalRDD reports unknown size — measured +45 CPU-s from lost
     broadcast decisions).
 
     Why every memo is cut: an uncut cached memo embeds the plan of the memo
@@ -153,9 +153,6 @@ def _materialize_memo(
     than the rendering it saves: first link call on a 4-core VM, medians of
     10 interleaved pairs, 130 -> 200 turns/s and 36 -> 22 CPU-s (kb_scale),
     263 -> 504 turns/s and 48 -> 26 CPU-s (transcripts).
-
-    truncate=False (persist()+count() only) is the opt-out behind
-    `truncate_memos=False`; it keeps the nested plans.
 
     reliable_dir: when set, the memo is WRITTEN to parquet under a unique
     subdirectory and read back instead of localCheckpoint — lineage is cut
@@ -178,7 +175,7 @@ def _materialize_memo(
         memo_path = f"{reliable_dir.rstrip('/')}/memo_{uuid.uuid4().hex[:12]}"
         df.write.mode("overwrite").parquet(memo_path)
         df = df.sparkSession.read.parquet(memo_path)
-    elif truncate:
+    else:
         df = df.localCheckpoint(eager=True)
         # the LogicalRDD's RDD holds the checkpoint blocks
         checkpoint_rdd = df._jdf.queryExecution().analyzed().rdd()
@@ -206,17 +203,12 @@ def release_memos() -> int:
 def best_aliases(
     model: CandidateModel,
     texts: DataFrame,
-    k: int = 5,
     threshold: float = DEFAULT_THRESHOLD,
     exact_fast_path: bool = False,
     fuzzy_rescue: bool = False,
-    jw_threshold: float = 0.88,
     use_blocking: bool = False,
     max_gram_df: int | None = None,
-    broadcast_rescue_aliases: bool = True,
-    rescue_salt_buckets: int = 16,
-    truncate_memos: bool | None = None,
-    broadcast_exact_aliases: bool = True,
+    broadcast_kb: bool = True,
     memo_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(text, alias, similarity) — best surviving alias per distinct mention
@@ -225,25 +217,21 @@ def best_aliases(
 
     fuzzy_rescue (off for reference parity, on in the production pipeline):
     mention strings whose every cosine candidate fell below `threshold` get a
-    second chance via Jaro-Winkler against blocking-key-compatible aliases
-    (same first lowercase character, |length delta| <= 4) — the north_star's
-    JW/Levenshtein scoring stage. Char-level edits destroy most of a short
-    word's 3-grams (cosine collapses) while JW degrades gracefully.
+    second chance via Jaro-Winkler (> JW_THRESHOLD) against
+    blocking-key-compatible aliases (same first lowercase character,
+    |length delta| <= 4) — the north_star's JW/Levenshtein scoring stage.
+    Char-level edits destroy most of a short word's 3-grams (cosine
+    collapses) while JW degrades gracefully.
 
-    broadcast_rescue_aliases: True (default) broadcasts the alias block
-    table — right for KB-sized alias sets, a hard OOM at a 100M-alias
-    gazetteer. False runs a SALTED shuffle join instead: the first-character
-    block key has only ~|alphabet| distinct values, so without salting every
-    's...' alias lands on one reducer; aliases pick a deterministic salt
-    from their own string, unmatched mentions replicate across all
-    `rescue_salt_buckets` (identical result set, verified in tests).
-
-    broadcast_exact_aliases: same knob for the J5 exact-fast-path alias
-    table (generate.py _candidate_branches) — False switches the verbatim
-    lookup to shuffle joins for gazetteers too big to broadcast.
-
-    truncate_memos: None (default) or True cuts the pre-rescue memo's
-    lineage; False keeps it (see link_mentions)."""
+    broadcast_kb: True (default) broadcasts the alias tables — right for
+    KB-sized alias sets, a hard OOM at a 100M-alias gazetteer. False
+    switches the J5 exact-fast-path lookup (generate.py
+    _candidate_branches) to shuffle joins and the rescue's alias block
+    table to a SALTED shuffle join: the first-character block key has only
+    ~|alphabet| distinct values, so without salting every 's...' alias
+    lands on one reducer; aliases pick a deterministic salt from their own
+    string, unmatched mentions replicate across all RESCUE_SALT_BUCKETS
+    (identical result set, verified in tests)."""
     # generate_best_candidates, inlined to keep its distinct-texts memo: the
     # rescue below anti-joins against that memo instead of re-running the
     # mention source (a cut memo is a checkpoint scan, so Spark's cache
@@ -259,7 +247,7 @@ def best_aliases(
         exact_fast_path,
         use_blocking=use_blocking,
         max_gram_df=max_gram_df,
-        broadcast_exact_aliases=broadcast_exact_aliases,
+        broadcast_kb=broadcast_kb,
         memo_checkpoint_dir=memo_checkpoint_dir,
     )
     best = _best_of_branches(short, exact, sims).filter(
@@ -271,9 +259,7 @@ def best_aliases(
     # materialize eagerly (both consumers run concurrently in the final job;
     # lazy evaluation recomputed the whole candidate-join subtree, measured
     # ~3x wall) and cut its lineage like every memo (see _materialize_memo)
-    best = _materialize_memo(
-        best, truncate=truncate_memos is not False, reliable_dir=memo_checkpoint_dir
-    )
+    best = _materialize_memo(best, reliable_dir=memo_checkpoint_dir)
 
     from spacy_ann_linker_spark.functions.stringsim import jaro_winkler_udf
 
@@ -286,7 +272,7 @@ def best_aliases(
     keyed = unmatched.withColumn("_bk", F.lower(F.substring("text", 1, 1))).withColumn(
         "_tlen", F.length("text")
     )
-    if broadcast_rescue_aliases:
+    if broadcast_kb:
         paired = keyed.join(F.broadcast(aliases), "_bk")
     else:
         # salted shuffle join (hot first-character blocks): aliases are the
@@ -299,7 +285,7 @@ def best_aliases(
             big=aliases,
             small=keyed,
             key="_bk",
-            salt_buckets=rescue_salt_buckets,
+            salt_buckets=RESCUE_SALT_BUCKETS,
             salt_source="alias",
         )
     blocked = (
@@ -308,7 +294,7 @@ def best_aliases(
         # the pandas-UDF Jaro-Winkler — north_star's JW/Levenshtein pair
         .filter(F.levenshtein(F.lower("text"), F.lower("alias"), 8) >= 0)
         .withColumn("similarity", jaro_winkler_udf(F.col("text"), F.col("alias")))
-        .filter(F.col("similarity") > F.lit(jw_threshold))
+        .filter(F.col("similarity") > F.lit(JW_THRESHOLD))
     )
     rescued = (
         blocked.groupBy("text")
@@ -335,7 +321,7 @@ def kb_get_candidates(
     declarative plan: best alias per text (exact fast path included), then
     alias->entity expansion.
     -> (text, alias, similarity, entity_id, prior, ent_pos)"""
-    best = best_aliases(model, texts, k=1, threshold=threshold, exact_fast_path=True)
+    best = best_aliases(model, texts, threshold=threshold, exact_fast_path=True)
     return best.join(kb.alias_map, "alias").select(
         "text", "alias", "similarity", "entity_id", "prior", "ent_pos"
     )
@@ -372,52 +358,45 @@ def link_mentions(
     turns: DataFrame,
     kb: KnowledgeBase,
     model: CandidateModel,
-    k: int = 5,
     threshold: float = DEFAULT_THRESHOLD,
-    no_description_threshold: float = 0.95,
     disambiguate: bool = True,
     exact_fast_path: bool = True,
     fuzzy_rescue: bool = False,
     use_blocking: bool = False,
     max_gram_df: int | None = None,
-    broadcast_rescue_aliases: bool = True,
-    truncate_memos: bool | None = None,
     word_vectors_table: DataFrame | None = None,
-    dim: int = 64,
-    broadcast_exact_aliases: bool = True,
-    broadcast_entity_vectors: bool = True,
+    broadcast_kb: bool = True,
     memo_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """mentions (MENTION_SCHEMA) + turns (TRANSCRIPT_SCHEMA) -> links.
 
-    memo_checkpoint_dir: route every memo materialization through a
-    RELIABLE parquet write+read instead of localCheckpoint/cache-only (see
-    _materialize_memo) — an executor loss then recomputes from files rather
-    than failing the query; recommended for 1000-executor runs.
+    Every memo (distinct texts, the pre-rescue best aliases,
+    mention_alias_map) is materialized with its lineage cut (see
+    _materialize_memo). memo_checkpoint_dir: route each one through a
+    RELIABLE parquet write+read instead of localCheckpoint — an executor
+    loss then recomputes from files rather than failing the query;
+    recommended for 1000-executor runs.
 
     word_vectors_table: optional `(token, vector)` table — context embedding
     runs as the pure-JVM table-backed mean-pool (see context_vectors). With
     gold mention spans supplied and fuzzy_rescue off, the whole link plan is
-    then Python-free.
+    then Python-free. Either way context is embedded at `kb.dim`, the
+    entity vectors' own length.
 
-    truncate_memos: None (default) or True cuts the lineage of every memo
-    (see _materialize_memo); False keeps mention_alias_map and the
-    pre-rescue memo uncut, the only opt-out (the distinct-texts memo is
-    always cut).
-
-    broadcast_exact_aliases / broadcast_entity_vectors: True (default) is
-    right for every KB that fits one executor; False is the 100M-entity
-    gazetteer regime — the reference's whole reason for remote linking was
-    "KB cannot be in memory" (remote_ann_linker.py:21-23), and this engine's
-    answer is that BOTH dimension tables can instead join as shuffles: the
-    exact-alias lookup keys on near-unique full strings, and the
+    broadcast_kb: True (default) is right for every KB that fits one
+    executor; False is the 100M-entity gazetteer regime — the reference's
+    whole reason for remote linking was "KB cannot be in memory"
+    (remote_ann_linker.py:21-23), and this engine's answer is that every
+    alias and entity dimension join can instead run as a shuffle: the
+    exact-alias lookup keys on near-unique full strings, the JW rescue's
+    first-character block join is salted (see best_aliases), and the
     entity-vector attach keys on entity_id (millions of distinct values —
     hot-entity skew is AQE skew-join territory, not a single-reducer
     collapse). Identical results either way, verified in tests.
 
-    no_description_threshold is accepted for config parity and intentionally
-    unused: in the reference it feeds a list comprehension whose result is
-    discarded (dead code, ann_linker.py:50,84-88 — F5).
+    The reference's no_description_threshold has no counterpart: it feeds
+    a list comprehension whose result is discarded (dead code,
+    ann_linker.py:50,84-88 — F5).
     Output: (conv_id, turn_idx, mention_id, text, start, end, label, alias,
     similarity, entity_id, context_similarity). Mentions whose candidates all
     fall below threshold are absent (reference leaves those spans
@@ -434,18 +413,14 @@ def link_mentions(
         best_aliases(
             model,
             texts,
-            k=k,
             threshold=threshold,
             exact_fast_path=exact_fast_path,
             fuzzy_rescue=fuzzy_rescue,
             use_blocking=use_blocking,
             max_gram_df=max_gram_df,
-            broadcast_rescue_aliases=broadcast_rescue_aliases,
-            truncate_memos=truncate_memos,
-            broadcast_exact_aliases=broadcast_exact_aliases,
+            broadcast_kb=broadcast_kb,
             memo_checkpoint_dir=memo_checkpoint_dir,
         ),
-        truncate=truncate_memos is not False,
         reliable_dir=memo_checkpoint_dir,
     )
 
@@ -470,7 +445,7 @@ def link_mentions(
     turns_needed = turns.join(
         matched.select("conv_id", "turn_idx").distinct(), ["conv_id", "turn_idx"], "left_semi"
     )
-    ctx = context_vectors(turns_needed, dim=dim, vectors_table=word_vectors_table)
+    ctx = context_vectors(turns_needed, dim=kb.dim, vectors_table=word_vectors_table)
     evecs = kb.entities.select(
         F.col("id").alias("entity_id"), F.col("vector").alias("ent_vector"), "vnorm"
     )
@@ -482,7 +457,7 @@ def link_mentions(
     # not ride through the argmax shuffle
     scored = (
         matched.join(
-            F.broadcast(evecs) if broadcast_entity_vectors else evecs, "entity_id"
+            F.broadcast(evecs) if broadcast_kb else evecs, "entity_id"
         )
         .join(ctx, ["conv_id", "turn_idx"])
         .withColumn(

@@ -5,7 +5,7 @@ joins").
 The linker's static artifacts (alias_vectors keyed by `idx`, aliases keyed
 by `alias`, KB alias_map) are joined against EVERY mention batch. When the
 gazetteer is too big to broadcast (the 100M-alias case where
-`broadcast_exact_aliases=False` falls back to shuffle joins), a plain
+`broadcast_kb=False` falls back to shuffle joins), a plain
 parquet artifact re-shuffles on every batch — the static side's shuffle is
 pure waste, identical bytes every time. Spark's answer is BUCKETING: write
 the artifact once with `bucketBy(n, key).sortBy(key)` into a catalog table;
@@ -79,7 +79,7 @@ def publish_model_bucketed(model, database: str, buckets: int = 64) -> None:
     side with its Exchange elided — the cluster-scale analog of the
     reference holding its fitted index resident in one process
     (candidate_generator.py:108-117). Use with the linker's
-    `broadcast_*=False` knobs: bucketing is the lever precisely when the
+    `broadcast_kb=False`: bucketing is the lever precisely when the
     gazetteer outgrows broadcast."""
     spark = model.cand.alias_vectors.sparkSession
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
@@ -103,7 +103,7 @@ def load_model_bucketed(spark: SparkSession, database: str, min_df: int = 2):
     load — only the physical layout differs, so every linker output is
     row-identical (tests/test_bucketed.py asserts this end-to-end)."""
     from spacy_ann_linker_spark.candidates.generate import CandidateModel
-    from spacy_ann_linker_spark.kb.build import KnowledgeBase
+    from spacy_ann_linker_spark.kb.build import KnowledgeBase, vector_dim
     from spacy_ann_linker_spark.pipeline import LinkageModel
     from spacy_ann_linker_spark.vectorize.tfidf import TfidfModel
 
@@ -112,6 +112,7 @@ def load_model_bucketed(spark: SparkSession, database: str, min_df: int = 2):
         entities=t("kb_entities"),
         alias_map=t("kb_alias_map"),
         short_aliases=t("short_aliases"),
+        dim=vector_dim(t("kb_entities")),
     )
     cand = CandidateModel(
         tfidf=TfidfModel(vocab=t("vocab"), min_df=min_df),

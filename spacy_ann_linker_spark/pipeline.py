@@ -54,22 +54,10 @@ def link_transcripts(
     model: LinkageModel,
     turns: DataFrame,
     mentions: DataFrame | None = None,
-    k: int = 5,
-    threshold: float = 0.7,
-    disambiguate: bool = True,
-    exact_fast_path: bool = True,
-    fuzzy_rescue: bool = False,
-    use_blocking: bool = False,
-    max_gram_df: int | None = None,
-    truncate_memos: bool | None = None,
-    word_vectors_table: DataFrame | None = None,
-    dim: int = 64,
-    broadcast_exact_aliases: bool = True,
-    broadcast_entity_vectors: bool = True,
-    broadcast_rescue_aliases: bool = True,
-    memo_checkpoint_dir: str | None = None,
+    **options,
 ) -> DataFrame:
-    """Link every mention in every turn to its KB entity.
+    """Link every mention in every turn to its KB entity; `options` are
+    link_mentions' keyword options.
 
     `mentions` defaults to dictionary extraction over the KB alias strings
     (the upstream-NER stand-in); pass explicit mentions (e.g. gold label
@@ -78,26 +66,7 @@ def link_transcripts(
     collect(), no per-pattern regex; the alias table can be any size."""
     if mentions is None:
         mentions = extract_mentions_gazetteer(turns, model.cand.aliases)
-    return link_mentions(
-        mentions,
-        turns,
-        model.kb,
-        model.cand,
-        k=k,
-        threshold=threshold,
-        disambiguate=disambiguate,
-        exact_fast_path=exact_fast_path,
-        fuzzy_rescue=fuzzy_rescue,
-        use_blocking=use_blocking,
-        max_gram_df=max_gram_df,
-        truncate_memos=truncate_memos,
-        word_vectors_table=word_vectors_table,
-        dim=dim,
-        broadcast_exact_aliases=broadcast_exact_aliases,
-        broadcast_entity_vectors=broadcast_entity_vectors,
-        broadcast_rescue_aliases=broadcast_rescue_aliases,
-        memo_checkpoint_dir=memo_checkpoint_dir,
-    )
+    return link_mentions(mentions, turns, model.kb, model.cand, **options)
 
 
 def run_checkpointed_linkage(
@@ -109,7 +78,6 @@ def run_checkpointed_linkage(
     aliases_df: DataFrame | None = None,
     input_snapshot: str = "",
     threshold: float = 0.7,
-    k: int = 5,
     min_df: int = 1,
     fuzzy_rescue: bool = True,
     use_blocking: bool = False,
@@ -135,7 +103,7 @@ def run_checkpointed_linkage(
         aliases_df = golden_kb.load_aliases(spark)
 
     cm = CheckpointManager(spark, ckpt_root)
-    cfg = {"threshold": threshold, "k": k, "min_df": min_df, "dim": dim,
+    cfg = {"threshold": threshold, "min_df": min_df, "dim": dim,
            "fuzzy_rescue": fuzzy_rescue, "use_blocking": use_blocking,
            "snapshot": input_snapshot}
     # KB inputs are dimension-sized: fingerprint their CONTENT so a changed
@@ -153,6 +121,7 @@ def run_checkpointed_linkage(
         short_aliases=amap.select("alias").distinct().filter(
             F.length("alias") < SHORT_ALIAS_MAX_LEN
         ),
+        dim=dim,
     )
 
     cand0 = fit_candidate_model(kb, min_df=min_df)
@@ -172,8 +141,8 @@ def run_checkpointed_linkage(
         "links",
         {"up": [fp_avecs, fp_ents], "cfg": cfg},
         lambda: link_transcripts(
-            model, turns, mentions=mentions, k=k, threshold=threshold,
-            fuzzy_rescue=fuzzy_rescue, use_blocking=use_blocking, dim=dim,
+            model, turns, mentions=mentions, threshold=threshold,
+            fuzzy_rescue=fuzzy_rescue, use_blocking=use_blocking,
         ),
     )
     clusters = cm.stage(

@@ -4,7 +4,7 @@ The plan-level Exchange-elision proof lives in
 tests/test_plans.py::test_bucketed_artifact_join_elides_exchanges; here we
 prove the end-to-end contract: a model round-tripped through bucketed
 catalog tables produces ROW-IDENTICAL links with the shuffle-join knobs on
-(`broadcast_*=False` — the too-big-to-broadcast deployment bucketing
+(`broadcast_kb=False` — the too-big-to-broadcast deployment bucketing
 exists for)."""
 
 import pytest
@@ -39,9 +39,7 @@ def test_bucketed_model_links_row_identical(spark, golden_model, golden_turns, t
         kw = dict(
             exact_fast_path=True,
             fuzzy_rescue=True,
-            broadcast_exact_aliases=False,
-            broadcast_entity_vectors=False,
-            broadcast_rescue_aliases=False,
+            broadcast_kb=False,
         )
         base = link_transcripts(model, golden_turns, **kw)
         bucketed = link_transcripts(loaded, golden_turns, **kw)

@@ -85,8 +85,7 @@ def test_fuzzy_rescue_salted_equals_broadcast(spark, big_model):
             texts,
             exact_fast_path=True,
             fuzzy_rescue=True,
-            broadcast_rescue_aliases=False,
-            rescue_salt_buckets=8,
+            broadcast_kb=False,
         )
     )
     assert bcast == salted
@@ -135,7 +134,7 @@ def test_broadcasts_off_identical_links(spark, big_model):
     """VERDICT r3 item 3: the two remaining unconditional broadcasts —
     the J5 exact-fast-path alias table and the disambiguation entity-vector
     table — must have working shuffle fallbacks for gazetteers too big to
-    broadcast. With both knobs off, the full link output (alias pick, score,
+    broadcast. With broadcast_kb off, the full link output (alias pick, score,
     entity, context score) must be row-identical on a 20k-entity /
     ~40k-alias KB."""
     from spacy_ann_linker_spark.link.linker import link_mentions, release_memos
@@ -178,8 +177,7 @@ def test_broadcasts_off_identical_links(spark, big_model):
         on = keyed(link_mentions(mentions, turns, kb, cand, exact_fast_path=True))
         off = keyed(
             link_mentions(
-                mentions, turns, kb, cand, exact_fast_path=True,
-                broadcast_exact_aliases=False, broadcast_entity_vectors=False,
+                mentions, turns, kb, cand, exact_fast_path=True, broadcast_kb=False,
             )
         )
     finally:

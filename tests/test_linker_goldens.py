@@ -47,7 +47,7 @@ def test_flagship_spans_and_aliases(golden_links):
 
 def test_exact_path_research(spark, golden_model):
     t = spark.createDataFrame([("research",)], "text string")
-    rows = best_aliases(golden_model.cand, t, k=1, threshold=0.0).collect()
+    rows = best_aliases(golden_model.cand, t, threshold=0.0).collect()
     assert rows[0]["alias"] == "Research"
     assert rows[0]["similarity"] == pytest.approx(1.0)
     ents = (
@@ -60,7 +60,7 @@ def test_exact_path_research(spark, golden_model):
 
 def test_fuzzy_path_researched(spark, golden_model):
     t = spark.createDataFrame([("researched",)], "text string")
-    rows = best_aliases(golden_model.cand, t, k=1, threshold=0.0).collect()
+    rows = best_aliases(golden_model.cand, t, threshold=0.0).collect()
     assert rows[0]["alias"] == "Research"
 
 
@@ -80,7 +80,7 @@ def test_short_alias_bypass(spark, golden_model):
 def test_threshold_strict_greater(spark, golden_model):
     # a candidate at exactly the threshold must be dropped (ann_linker.py:82)
     t = spark.createDataFrame([("researched",)], "text string")
-    rows = best_aliases(golden_model.cand, t, k=5, threshold=1.0).collect()
+    rows = best_aliases(golden_model.cand, t, threshold=1.0).collect()
     assert rows == []
 
 
@@ -130,3 +130,15 @@ def test_exact_fast_path_agrees_with_full_join(spark, golden_model):
     ra = [(r["text"], r["alias"], r["entity_id"]) for r in a.orderBy("start").collect()]
     rb = [(r["text"], r["alias"], r["entity_id"]) for r in b.orderBy("start").collect()]
     assert ra == rb
+
+
+def test_link_transcripts_rejects_unknown_option(spark, golden_model):
+    """link_transcripts forwards its options to link_mentions, so a removed
+    or misspelt option still fails loudly instead of being ignored."""
+    turns = spark.createDataFrame(
+        [("c1", 0, "user", GOLDEN_SENTENCE, "", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    mentions = extract_mentions(turns, ["NLP"])
+    with pytest.raises(TypeError):
+        link_transcripts(golden_model, turns, mentions=mentions, k=5)

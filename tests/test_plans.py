@@ -151,9 +151,8 @@ def test_memo_lineage_truncation(spark):
     """Link memo tables cut lineage (eager localCheckpoint under the cache)
     so no memo's plan nests into the next one's or serializes into every
     downstream task binary — measured 20-70 s blocked links with
-    >100 s/stage GC without it. The truncate_memos=False opt-out must keep
-    the plain cache with no checkpoint pass, and both variants need an
-    InMemoryRelation on top (a bare LogicalRDD loses size stats and with
+    >100 s/stage GC without it. The memo needs an InMemoryRelation on top
+    of the checkpoint scan (a bare LogicalRDD loses size stats and with
     them the downstream broadcast decisions)."""
     from pyspark.sql import functions as F
 
@@ -166,21 +165,16 @@ def test_memo_lineage_truncation(spark):
         # inspect a consumer, the way link_mentions' joins actually see it
         return memo.filter(F.col("id") >= 0)._jdf.queryExecution().optimizedPlan().toString()
 
-    truncated = _materialize_memo(df, truncate=True)
+    truncated = _materialize_memo(df)
     plan_t = downstream_plan(truncated)
     # the cached child is a checkpoint scan (LogicalRDD / Scan ExistingRDD),
     # not the original projection lineage
     assert "ExistingRDD" in plan_t or "LogicalRDD" in plan_t, plan_t
     assert "InMemoryRelation" in plan_t, plan_t
 
-    plain = _materialize_memo(df, truncate=False)
-    plan_p = downstream_plan(plain)
-    assert "ExistingRDD" not in plan_p and "LogicalRDD" not in plan_p, plan_p
-    assert "InMemoryRelation" in plan_p, plan_p
-
-    # identical contents either way
-    assert sorted(truncated.collect()) == sorted(plain.collect())
-    assert release_memos() == 2
+    # same contents as the uncut lineage
+    assert sorted(truncated.collect()) == sorted(df.collect())
+    assert release_memos() == 1
 
 
 def test_blocked_link_plan_shape(spark, golden_model):

@@ -3,6 +3,8 @@ tests/test_cli.py:18-31): dumped and reloaded state answers get_candidates
 identically; the model dir replaces cfg/kb/index/joblib/npz blobs
 (candidate_generator.py:325-346) with tables."""
 
+import pytest
+
 from spacy_ann_linker_spark.link.linker import kb_get_candidates
 from spacy_ann_linker_spark.pipeline import LinkageModel
 
@@ -37,3 +39,40 @@ def test_reloaded_model_links_flagship(spark, golden_model, tmp_path):
     m = extract_mentions(turns, ["NLP", "researched", "machine learning"])
     links = link_transcripts(reloaded, turns, mentions=m, exact_fast_path=False)
     assert [r["entity_id"] for r in links.orderBy("start").collect()] == ["a3", "a15", "a1"]
+
+
+def test_reloaded_model_links_at_its_own_dim(spark, tmp_path):
+    """A model built at a non-default vector dim links with context embedded
+    at that dim: the KB carries it and a reloaded KB reads it back from its
+    entity vectors. Embedding context at any other length pads the dot
+    product with NULLs and every context_similarity comes out NULL."""
+    import numpy as np
+
+    from spacy_ann_linker_spark.data.word_vectors import mean_pool
+    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from spacy_ann_linker_spark.pipeline import build_golden_model, link_transcripts
+
+    path = str(tmp_path / "model_dim32")
+    build_golden_model(spark, dim=32, min_df=1).save(path)
+    reloaded = LinkageModel.load(spark, path)
+
+    text = "NLP is a highly researched subset of machine learning."
+    turns = spark.createDataFrame(
+        [("c1", 0, "user", text, "", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    m = extract_mentions(turns, ["NLP", "researched", "machine learning"])
+    links = link_transcripts(reloaded, turns, mentions=m).collect()
+    assert len(links) == 3
+    assert all(r["context_similarity"] is not None for r in links)
+
+    ent_vecs = {
+        r["id"]: np.asarray(r["vector"], dtype=np.float64)
+        for r in reloaded.kb.entities.select("id", "vector").collect()
+    }
+    ctx = mean_pool(text, 32).astype(np.float64)
+    for r in links:
+        ev = ent_vecs[r["entity_id"]]
+        want = ev @ ctx / (np.linalg.norm(ev) * np.linalg.norm(ctx) + 1e-8)
+        assert r["context_similarity"] == pytest.approx(want, abs=1e-5)
+    assert reloaded.kb.dim == 32
