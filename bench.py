@@ -21,6 +21,66 @@ import time
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# operator queries timed over the sf tables, in bench order
+BENCH_QUERIES = [
+    "a1_ngram_document_frequency",
+    "t1_cosine_topk",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_lsh_jaccard",
+    "text_quality_score",
+    "text_unigram_logprob",
+    "sessionize_events",
+    "cc_components",
+    "split_train_val_test",
+    "pack_doc_sequences",
+    "a4b_mean_pool_table",
+    "jw_similarity",
+    "ann_ivf_topk",
+    "bm25_score",
+    "stratified_sample",
+    "cluster_pairwise_metrics",
+    "golden_records",
+    "topk_terms",
+    "group_percentiles",
+    "fellegi_sunter_score",
+    "bcubed_metrics",
+    "cluster_agreement",
+    "token_block_pairs",
+    "meta_block_cnp",
+    "set_similarity_join",
+    "monge_elkan_sim",
+    "asof_attribution",
+    "interval_join_windows",
+    "soft_tfidf_sim",
+    "dl_similarity",
+    "fs_tf_adjusted",
+    "cascade_link",
+    "dedup_paragraphs",
+    "cosine_similarity_join",
+    "dedup_duplicate_spans",
+    "dedup_containment",
+    "qlm_score",
+    "rrf_fusion",
+    "token_pmi",
+    "sliding_window_sn",
+    "ranking_metrics",
+    "context_window",
+    "decayed_priors",
+    "contrastive_negatives",
+    "qgram_edit_join",
+    "ann_ivfpq_topk",
+    "bm25_prf_score",
+    "pagerank_docs",
+    "label_propagation",
+    "normalize_names",
+    "scd2_history",
+    "scd2_merge",
+    "mutual_best_pairs",
+    "temperature_mix",
+    "suffix_block_pairs",
+]
+
 
 def _sf_from_dir(d: str) -> float:
     base = os.path.basename(d.rstrip("/"))
@@ -212,64 +272,7 @@ def run_bench(cpus: int) -> dict:
     # operator queries over the driver sf tables (skipped in scaling mode —
     # the scaling metric is link throughput on the shared transcript input)
     queries = entry_mod.queries()
-    for name in [] if os.environ.get("SPARK_GRAFT_LINK_ONLY") else [
-        "a1_ngram_document_frequency",
-        "t1_cosine_topk",
-        "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
-        "dedup_lsh_jaccard",
-        "text_quality_score",
-        "text_unigram_logprob",
-        "sessionize_events",
-        "cc_components",
-        "split_train_val_test",
-        "pack_doc_sequences",
-        "a4b_mean_pool_table",
-        "jw_similarity",
-        "ann_ivf_topk",
-        "bm25_score",
-        "stratified_sample",
-        "cluster_pairwise_metrics",
-        "golden_records",
-        "topk_terms",
-        "group_percentiles",
-        "fellegi_sunter_score",
-        "bcubed_metrics",
-        "cluster_agreement",
-        "token_block_pairs",
-        "meta_block_cnp",
-        "set_similarity_join",
-        "monge_elkan_sim",
-        "asof_attribution",
-        "interval_join_windows",
-        "soft_tfidf_sim",
-        "dl_similarity",
-        "fs_tf_adjusted",
-        "cascade_link",
-        "dedup_paragraphs",
-        "cosine_similarity_join",
-        "dedup_duplicate_spans",
-        "dedup_containment",
-        "qlm_score",
-        "rrf_fusion",
-        "token_pmi",
-        "sliding_window_sn",
-        "ranking_metrics",
-        "context_window",
-        "decayed_priors",
-        "contrastive_negatives",
-        "qgram_edit_join",
-        "ann_ivfpq_topk",
-        "bm25_prf_score",
-        "pagerank_docs",
-        "label_propagation",
-        "normalize_names",
-        "scd2_history",
-        "scd2_merge",
-        "mutual_best_pairs",
-        "temperature_mix",
-        "suffix_block_pairs",
-    ]:
+    for name in [] if os.environ.get("SPARK_GRAFT_LINK_ONLY") else BENCH_QUERIES:
         t0 = time.perf_counter()
         _noop(queries[name](spark, SF_DIR))
         timings[name] = round(time.perf_counter() - t0, 3)

@@ -5,21 +5,23 @@ other half auditable — VERDICT r5 item 5).
   python scripts/strict_gate_json.py [sf_dir] [out_path]
 """
 import json
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as e
 from scripts.strict_oracle_check import TABLES, norm
 from spacy_ann_linker_spark.session import get_spark
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/CORRECTNESS_LOCAL_r6.json"
+OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(ROOT, "CORRECTNESS_LOCAL_r6.json")
 
 
 def main():
-    spark = get_spark(cores=int(__import__("os").environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

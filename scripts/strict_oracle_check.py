@@ -7,11 +7,13 @@ given SF dir — predicts hash_match, unlike the tolerant pytest mirror.
 Extra args restrict the run to the named queries (fast iteration on a new
 operator); no extra args = the full gate.
 """
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as e
 from spacy_ann_linker_spark.session import get_spark
 
@@ -29,7 +31,7 @@ def norm(v):
 
 
 def main():
-    spark = get_spark(cores=int(__import__("os").environ.get("SPARK_GRAFT_CPUS", "8")))
+    spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

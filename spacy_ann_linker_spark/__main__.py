@@ -130,10 +130,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="prune ngrams with df above this from the exact cosine join")
     lk.add_argument("--no-broadcast", action="store_true", dest="no_broadcast",
                     help="shuffle fallbacks for ALL alias/entity "
-                         "dimension joins: exact-alias lookup, "
-                         "entity-vector attach, and the salted JW-rescue "
-                         "block join (gazetteers too big to broadcast; "
-                         "identical results)")
+                         "dimension joins: mention extraction's token "
+                         "join, exact-alias lookup, entity-vector attach, "
+                         "and the salted JW-rescue block join (gazetteers "
+                         "too big to broadcast; identical results)")
     lk.add_argument("--memo-checkpoint-dir", default=None, dest="memo_checkpoint_dir",
                     help="materialize memos via reliable parquet "
                          "write+read under this dir instead of "

@@ -16,10 +16,9 @@ generation at all.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spacy_ann_linker_spark.candidates.generate import DEFAULT_K, CandidateModel
 from spacy_ann_linker_spark.functions.ngrams import char_wb_ngrams_col
 
 
@@ -410,36 +409,3 @@ def meta_block_prune(
         )
         .distinct()
     )
-
-
-def generate_candidates_blocked(
-    model: CandidateModel,
-    texts: DataFrame,
-    k: int = DEFAULT_K,
-    num_hashes: int = 24,
-    bands: int = 12,
-    prefix_len: int = 3,
-    prefix_salt_buckets: int = 0,
-) -> DataFrame:
-    """Blocked candidate generation: (text, alias, similarity, rank) with
-    exact cosine scored only on LSH ∪ sorted-neighborhood pairs.
-
-    Same output contract as generate_candidates; recall < 1 by construction
-    (tunable), verified >= the threshold-relevant region in tests."""
-    from spacy_ann_linker_spark.candidates.generate import _sims_blocked, tie_key
-    from spacy_ann_linker_spark.link.linker import _register_memo
-
-    texts = _register_memo(texts.select("text").distinct().persist())
-
-    short_df = model.short_aliases
-    short = texts.join(short_df, texts.text == short_df["alias"], "inner").select(
-        "text", "alias", F.lit(1.0).alias("similarity"), F.lit(1).alias("rank")
-    )
-    rest = _register_memo(
-        texts.join(short_df, texts.text == short_df["alias"], "left_anti").persist()
-    )
-
-    sims = _sims_blocked(model, rest, num_hashes, bands, prefix_len, prefix_salt_buckets)
-    w = Window.partitionBy("text").orderBy(tie_key().desc(), F.asc("alias"))
-    topk = sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= F.lit(k))
-    return short.unionByName(topk)

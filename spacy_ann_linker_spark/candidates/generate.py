@@ -42,6 +42,11 @@ from spacy_ann_linker_spark.vectorize.tfidf import TfidfModel
 
 DEFAULT_K = 5  # candidate_generator.py:37; AnnKnowledgeBase uses k=1 (ann_kb.py:24)
 TIE_DIGITS = 12  # summation-order noise is ~1e-16; cosines are in [0, 1]
+# blocked path (_sims_blocked): 24 minhashes in 12 bands of 2 rows, and
+# sorted-neighborhood blocks on a 3-char lowercase prefix
+LSH_NUM_HASHES = 24
+LSH_BANDS = 12
+PREFIX_LEN = 3
 
 
 def tie_key():
@@ -135,21 +140,12 @@ def _sims_exact(model: CandidateModel, rest: DataFrame, max_gram_df: int | None 
     )
 
 
-def _sims_blocked(
-    model: CandidateModel,
-    rest: DataFrame,
-    num_hashes: int = 24,
-    bands: int = 12,
-    prefix_len: int = 3,
-    prefix_salt_buckets: int = 0,
-) -> DataFrame:
+def _sims_blocked(model: CandidateModel, rest: DataFrame) -> DataFrame:
     """Blocked similarity: exact cosine scored ONLY on MinHash-LSH ∪
     sorted-neighborhood candidate pairs (candidates/blocking.py) — the path
     whose cost is linear in corpus + bucket collisions, never all-pairs and
-    never hot-gram-quadratic. Recall < 1 by construction (tunable), validated
-    against the exact join in tests. prefix_salt_buckets>0 salts the
-    Zipf-hot prefix block join (pair set identical; see
-    sorted_neighborhood_pairs)."""
+    never hot-gram-quadratic. Recall < 1 by construction, validated
+    against the exact join in tests."""
     from spacy_ann_linker_spark.candidates.blocking import (
         lsh_pairs,
         sorted_neighborhood_pairs,
@@ -162,16 +158,13 @@ def _sims_blocked(
     pairs = (
         lsh_pairs(
             rest,
-            num_hashes=num_hashes,
-            bands=bands,
-            alias_keys=model.alias_band_keys(num_hashes, bands),
+            num_hashes=LSH_NUM_HASHES,
+            bands=LSH_BANDS,
+            alias_keys=model.alias_band_keys(LSH_NUM_HASHES, LSH_BANDS),
             dedup=False,
         )
         .unionByName(
-            sorted_neighborhood_pairs(
-                rest, model.aliases, prefix_len,
-                salt_buckets=prefix_salt_buckets, dedup=False,
-            )
+            sorted_neighborhood_pairs(rest, model.aliases, PREFIX_LEN, dedup=False)
         )
         .distinct()
     )

@@ -323,8 +323,8 @@ def prefix_filter_jaccard_pairs(
     # sizes and the pair set are unchanged): array_intersect over int
     # arrays takes the primitive-hash path, measured 2.7x cheaper than
     # string hashing at verify volume, and the posting shuffle carries
-    # 4-byte codes instead of token strings (guide §2.3 narrower types).
-    # The rank's bucket prefix only needs injectivity here, not global
+    # 8-byte LongType codes instead of token strings (guide §2.3 narrower
+    # types). The rank's bucket prefix only needs injectivity here, not global
     # order; vocab-sized machinery, paid once per corpus.
     from spacy_ann_linker_spark.operators.rank import global_row_number
 

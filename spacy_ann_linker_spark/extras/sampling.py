@@ -20,16 +20,6 @@ from pyspark.sql import functions as F
 _RESOLUTION = 1_000_000
 
 
-def split_column(key_col, seed: str = "") -> "F.Column":
-    """[0, 1) deterministic uniform value from a row key: the first 8 hex
-    chars of md5(seed || key) scaled down. Cross-engine (DuckDB:
-    ('0x' || substr(md5(...), 1, 8))::BIGINT)."""
-    keyed = F.concat(F.lit(seed), key_col.cast("string"))
-    return (
-        F.conv(F.substring(F.md5(keyed), 1, 8), 16, 10).cast("bigint") % _RESOLUTION
-    ) / F.lit(float(_RESOLUTION))
-
-
 def deterministic_split(
     df: DataFrame,
     key_col: str,

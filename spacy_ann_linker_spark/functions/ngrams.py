@@ -12,16 +12,13 @@ char_wb semantics (public sklearn source, CountVectorizer._char_wb_ngrams):
 
 tf = raw in-document ngram count; idf = ln((1+N)/(1+df)) + 1 (smooth_idf);
 rows L2-normalized. Those aggregations live in vectorize/tfidf.py — this
-module is only the analyzer, exposed as an Arrow-vectorized pandas UDF
-(the engine's "no per-row Python" hot path is the explode/groupBy that
-follows, all JVM-side).
+module is only the analyzer: `char_wb_ngrams` is the Python reference and
+`char_wb_ngrams_col` the pure-JVM column expression the vectorizer runs.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def char_wb_ngrams(text: str, n: int = 3) -> list[str]:
@@ -38,14 +35,6 @@ def char_wb_ngrams(text: str, n: int = 3) -> list[str]:
         for offset in range(w_len - n + 1):
             out.append(w[offset : offset + n])
     return out
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def char_wb_ngrams_udf(texts: pd.Series) -> pd.Series:
-    """Arrow-batched char_wb 3-gram extraction: text -> array<string>.
-    (Reference implementation; the hot path uses the pure-JVM
-    `char_wb_ngrams_col` below — equality asserted in tests.)"""
-    return texts.map(lambda t: char_wb_ngrams(t, 3))
 
 
 def char_wb_ngrams_col(text_col, n: int = 3):

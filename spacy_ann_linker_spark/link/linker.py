@@ -62,12 +62,6 @@ _MEMO_SCOPE: contextvars.ContextVar = contextvars.ContextVar(
 )
 
 
-def _register_memo(df: DataFrame) -> DataFrame:
-    scope = _MEMO_SCOPE.get()
-    (_PERSISTED_MEMOS if scope is None else scope).append(df)
-    return df
-
-
 def _rm_fs_dir(spark, path: str) -> None:
     """Best-effort recursive delete through the Hadoop FileSystem API, so
     reliable-memo dirs on any scheme (local, hdfs://, s3a://) are GC'd."""
@@ -185,7 +179,9 @@ def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> DataFra
     # per-request scratch, not caller-owned output
     out._memo_parquet_path = memo_path
     out._memo_checkpoint_rdd = checkpoint_rdd
-    return _register_memo(out)
+    scope = _MEMO_SCOPE.get()
+    (_PERSISTED_MEMOS if scope is None else scope).append(out)
+    return out
 
 
 def release_memos() -> int:

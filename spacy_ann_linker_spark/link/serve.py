@@ -55,31 +55,32 @@ def link_documents(
 ) -> list[dict]:
     """Pure request handler: LinkingRequest documents -> LinkingResponse
     documents (testable without a socket)."""
-    from spacy_ann_linker_spark.link.linker import link_mentions
+    from spacy_ann_linker_spark.data.golden_kb import _local_relation
+    from spacy_ann_linker_spark.link.linker import link_mentions, memo_scope
 
     turn_rows = []
     mention_rows = []
     for i, doc in enumerate(documents):
         ctx = doc.get("context") or ""
         conv = f"d{i}"
-        turn_rows.append((conv, 0, "user", ctx, "", None))
+        turn_rows.append({"conv_id": conv, "turn_idx": 0, "role": "user", "text": ctx, "tool": ""})
         for s in doc.get("spans") or []:
             start, end = int(s.get("start", -1)), int(s.get("end", -1))
             if 0 <= start < end <= len(ctx):
                 mention_rows.append(
-                    (conv, 0, ctx[start:end], start, end, s.get("label"))
+                    {"conv_id": conv, "turn_idx": 0, "text": ctx[start:end],
+                     "start": start, "end": end, "label": s.get("label")}
                 )
-    turns = spark.createDataFrame(
-        turn_rows,
+    turn_cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    turns = _local_relation(
+        spark, turn_rows, turn_cols,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    mentions = spark.createDataFrame(
-        mention_rows or [("", 0, "", 0, 0, None)],
+    mention_cols = ["conv_id", "turn_idx", "text", "start", "end", "label"]
+    mentions = _local_relation(
+        spark, mention_rows, mention_cols,
         "conv_id string, turn_idx int, text string, start int, end int, label string",
     ).withColumn("mention_id", F.xxhash64("conv_id", "turn_idx", "start"))
-    if not mention_rows:
-        mentions = mentions.filter(F.col("conv_id") != "")
-    from spacy_ann_linker_spark.link.linker import memo_scope
 
     # long-running server: free THIS request's memo caches on exit — scoped,
     # so a concurrent /link handler thread's in-flight memos are untouched

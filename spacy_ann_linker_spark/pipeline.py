@@ -65,7 +65,11 @@ def link_transcripts(
     default path is the distributed tokenize->join gazetteer — no driver
     collect(), no per-pattern regex; the alias table can be any size."""
     if mentions is None:
-        mentions = extract_mentions_gazetteer(turns, model.cand.aliases)
+        mentions = extract_mentions_gazetteer(
+            turns,
+            model.cand.aliases,
+            broadcast_aliases=options.get("broadcast_kb", True),
+        )
     return link_mentions(mentions, turns, model.kb, model.cand, **options)
 
 

@@ -49,13 +49,4 @@ MENTION_SCHEMA = T.StructType(
     ]
 )
 
-SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("text", T.StringType(), False),
-        T.StructField("start", T.IntegerType(), False),
-        T.StructField("end", T.IntegerType(), False),
-        T.StructField("label", T.StringType(), True),
-    ]
-)
-
 VECTOR_TYPE = T.ArrayType(T.FloatType())

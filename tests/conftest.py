@@ -14,3 +14,12 @@ def golden_model(spark):
     from spacy_ann_linker_spark.pipeline import build_golden_model
 
     return build_golden_model(spark)
+
+
+def gazetteer_mentions(turns, patterns, label=None):
+    """Gazetteer mentions of a pattern list in `turns`: the patterns become
+    the alias table, one row each."""
+    from spacy_ann_linker_spark.mentions.extract import extract_mentions_gazetteer
+
+    aliases = turns.sparkSession.createDataFrame([(p,) for p in patterns], "alias string")
+    return extract_mentions_gazetteer(turns, aliases, label=label)

@@ -4,8 +4,9 @@ and the LinkingResponse document shape (api/types.py:20-40)."""
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.link.api import spans_to_json, to_linking_response
-from spacy_ann_linker_spark.mentions.extract import extract_mentions
 from spacy_ann_linker_spark.pipeline import link_transcripts
+
+from conftest import gazetteer_mentions
 
 SENT = "NLP is a highly researched subset of Machine learning."
 
@@ -19,7 +20,7 @@ def _turns(spark):
 
 def test_ents_to_json_golden(spark):
     t = _turns(spark)
-    mentions = extract_mentions(t, ["NLP", "researched", "Machine learning"], label="SKILL")
+    mentions = gazetteer_mentions(t, ["NLP", "researched", "Machine learning"], label="SKILL")
     rows = spans_to_json(mentions).collect()
     assert len(rows) == 1
     got = [s.asDict() for s in rows[0]["spans"]]
@@ -32,7 +33,7 @@ def test_ents_to_json_golden(spark):
 
 def test_linking_response_shape(spark, golden_model):
     t = _turns(spark)
-    mentions = extract_mentions(t, ["NLP", "researched", "Machine learning"], label="SKILL")
+    mentions = gazetteer_mentions(t, ["NLP", "researched", "Machine learning"], label="SKILL")
     links = link_transcripts(golden_model, t, mentions=mentions, exact_fast_path=False)
     docs = to_linking_response(links, t).collect()
     assert len(docs) == 1

@@ -6,11 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.candidates.blocking import (
-    generate_candidates_blocked,
     lsh_pairs,
     sorted_neighborhood_pairs,
 )
-from spacy_ann_linker_spark.candidates.generate import generate_candidates
+from spacy_ann_linker_spark.candidates.generate import _sims_blocked, _sims_exact
 from spacy_ann_linker_spark.operators.salted import salted_count_by_key, salted_join
 
 
@@ -35,8 +34,8 @@ def mention_corpus(spark):
 
 
 def test_blocked_recall_vs_exact(spark, prod_model, mention_corpus):
-    exact = generate_candidates(prod_model, mention_corpus, k=5)
-    blocked = generate_candidates_blocked(prod_model, mention_corpus, k=5)
+    exact = _sims_exact(prod_model, mention_corpus)
+    blocked = _sims_blocked(prod_model, mention_corpus)
     # every above-threshold exact candidate must be found by the blocked path
     e = {(r["text"], r["alias"]) for r in exact.filter(F.col("similarity") > 0.7).collect()}
     b = {(r["text"], r["alias"]) for r in blocked.filter(F.col("similarity") > 0.7).collect()}

@@ -118,11 +118,11 @@ def test_reliable_memo_checkpoint_survives_cache_loss(spark, tmp_path, golden_mo
 
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
     from spacy_ann_linker_spark.link.linker import memo_scope
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from conftest import gazetteer_mentions
     from spacy_ann_linker_spark.pipeline import link_transcripts
 
     turns = generate_transcripts(spark, 64)
-    mentions = extract_mentions(turns, ["Research", "ML", "NLP"])
+    mentions = gazetteer_mentions(turns, ["Research", "ML", "NLP"])
 
     def keyed(rows):
         return {

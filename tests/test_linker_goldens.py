@@ -11,8 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.link.linker import best_aliases
-from spacy_ann_linker_spark.mentions.extract import extract_mentions
 from spacy_ann_linker_spark.pipeline import link_transcripts
+
+from conftest import gazetteer_mentions
 
 GOLDEN_SENTENCE = "NLP is a highly researched subset of machine learning."
 
@@ -23,7 +24,7 @@ def golden_links(spark, golden_model):
         [("c1", 0, "user", GOLDEN_SENTENCE, "", None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    mentions = extract_mentions(turns, ["NLP", "researched", "machine learning"], label="SKILL")
+    mentions = gazetteer_mentions(turns, ["NLP", "researched", "machine learning"], label="SKILL")
     return (
         link_transcripts(golden_model, turns, mentions=mentions, exact_fast_path=False)
         .orderBy("start")
@@ -110,7 +111,7 @@ def test_disambiguate_false_annotates_without_kb_id(spark, golden_model):
         [("c1", 0, "user", GOLDEN_SENTENCE, "", None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    mentions = extract_mentions(turns, ["NLP", "machine learning"])
+    mentions = gazetteer_mentions(turns, ["NLP", "machine learning"])
     out = link_transcripts(
         golden_model, turns, mentions=mentions, disambiguate=False, exact_fast_path=False
     ).collect()
@@ -124,7 +125,7 @@ def test_exact_fast_path_agrees_with_full_join(spark, golden_model):
         [("c1", 0, "user", GOLDEN_SENTENCE, "", None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    mentions = extract_mentions(turns, ["NLP", "researched", "machine learning"])
+    mentions = gazetteer_mentions(turns, ["NLP", "researched", "machine learning"])
     a = link_transcripts(golden_model, turns, mentions=mentions, exact_fast_path=True)
     b = link_transcripts(golden_model, turns, mentions=mentions, exact_fast_path=False)
     ra = [(r["text"], r["alias"], r["entity_id"]) for r in a.orderBy("start").collect()]
@@ -139,6 +140,6 @@ def test_link_transcripts_rejects_unknown_option(spark, golden_model):
         [("c1", 0, "user", GOLDEN_SENTENCE, "", None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    mentions = extract_mentions(turns, ["NLP"])
+    mentions = gazetteer_mentions(turns, ["NLP"])
     with pytest.raises(TypeError):
         link_transcripts(golden_model, turns, mentions=mentions, k=5)

@@ -1,18 +1,38 @@
 """Gazetteer mention extraction (F8-F10, C7)."""
 
+import random
 import re
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.mentions.extract import (
-    AhoCorasick,
-    extract_mentions,
     extract_mentions_gazetteer,
-    find_spans_ac,
     validate_spans,
 )
+
+from conftest import gazetteer_mentions
+
+
+def _regex_oracle(pats):
+    """EntityRuler-style verbatim phrase match as one longest-first regex
+    alternation with word-boundary lookarounds; `_regex_spans` scans it left
+    to right (leftmost-longest, non-overlapping)."""
+    body = "|".join(re.escape(p) for p in sorted(set(pats), key=len, reverse=True))
+    return re.compile(rf"(?<!\w)(?:{body})(?!\w)")
+
+
+def _regex_spans(text, rx):
+    """(start, end, text) of every oracle match, left to right."""
+    return [(m.start(), m.end(), m.group(0)) for m in rx.finditer(text or "")]
+
+
+def _oracle_keys(turns, pats):
+    rx = _regex_oracle(pats)
+    return {
+        (r["conv_id"], r["turn_idx"], *span)
+        for r in turns.collect()
+        for span in _regex_spans(r["text"], rx)
+    }
 
 
 def _turns(spark, text):
@@ -24,7 +44,7 @@ def _turns(spark, text):
 
 def test_basic_extraction(spark):
     t = _turns(spark, "I like NLP and machine learning a lot")
-    rows = extract_mentions(t, ["NLP", "machine learning"]).orderBy("start").collect()
+    rows = gazetteer_mentions(t, ["NLP", "machine learning"]).orderBy("start").collect()
     assert [(r["text"], r["start"], r["end"]) for r in rows] == [
         ("NLP", 7, 10),
         ("machine learning", 15, 31),
@@ -33,51 +53,48 @@ def test_basic_extraction(spark):
 
 def test_longest_match_wins(spark):
     t = _turns(spark, "machine learning rocks")
-    rows = extract_mentions(t, ["machine", "machine learning"]).collect()
+    rows = gazetteer_mentions(t, ["machine", "machine learning"]).collect()
     assert [r["text"] for r in rows] == ["machine learning"]
 
 
 def test_word_boundaries(spark):
     t = _turns(spark, "HTML is not ML but ML is ML")
-    rows = extract_mentions(t, ["ML"]).collect()
+    rows = gazetteer_mentions(t, ["ML"]).collect()
     assert len(rows) == 3  # not the one inside HTML
 
 
 def test_case_sensitive_default(spark):
     t = _turns(spark, "nlp is lowercase NLP is upper")
-    rows = extract_mentions(t, ["NLP"]).collect()
+    rows = gazetteer_mentions(t, ["NLP"]).collect()
     assert [r["start"] for r in rows] == [17]
 
 
 def test_mention_ids_deterministic(spark):
     t = _turns(spark, "NLP and NLP again")
-    a = extract_mentions(t, ["NLP"]).orderBy("start").collect()
-    b = extract_mentions(t, ["NLP"]).orderBy("start").collect()
+    a = gazetteer_mentions(t, ["NLP"]).orderBy("start").collect()
+    b = gazetteer_mentions(t, ["NLP"]).orderBy("start").collect()
     assert [r["mention_id"] for r in a] == [r["mention_id"] for r in b]
     assert len({r["mention_id"] for r in a}) == 2
 
 
 def test_validate_spans_filters_bad_offsets(spark):
     t = _turns(spark, "NLP here")
-    good = extract_mentions(t, ["NLP"])
+    good = gazetteer_mentions(t, ["NLP"])
     bad = good.withColumn("start", F.col("start") + 1)
     assert validate_spans(good, t).count() == 1
     assert validate_spans(bad, t).count() == 0
 
 
 def test_gazetteer_matches_regex_on_golden_aliases(spark):
-    """The distributed join gazetteer reproduces the in-row Aho-Corasick
-    extractor exactly over the golden alias list on synthetic transcripts."""
+    """The distributed join gazetteer reproduces the regex oracle exactly
+    over the golden alias list on synthetic transcripts."""
     from spacy_ann_linker_spark.data import golden_kb
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
 
     turns = generate_transcripts(spark, 300)
     aliases = golden_kb.load_aliases(spark).select("alias")
     pats = [r["alias"] for r in aliases.collect()]
-    want = {
-        (r["conv_id"], r["turn_idx"], r["start"], r["end"], r["text"])
-        for r in extract_mentions(turns, pats).collect()
-    }
+    want = _oracle_keys(turns, pats)
     got = {
         (r["conv_id"], r["turn_idx"], r["start"], r["end"], r["text"])
         for r in extract_mentions_gazetteer(turns, aliases).collect()
@@ -87,7 +104,8 @@ def test_gazetteer_matches_regex_on_golden_aliases(spark):
 
 def test_gazetteer_40k_alias_kb_bounded(spark):
     """Scale smoke (VERDICT item 5): 40k-alias synthetic KB, no driver-side
-    pattern list — extraction completes in bounded time and AC agrees."""
+    pattern list — extraction completes in bounded time and the regex
+    oracle agrees."""
     import time
 
     from spacy_ann_linker_spark.data.synthetic_kb import generate_kb
@@ -100,11 +118,9 @@ def test_gazetteer_40k_alias_kb_bounded(spark):
     got = extract_mentions_gazetteer(turns, alias_names).count()
     gaz_sec = time.perf_counter() - t0
     pats = [r["alias"] for r in alias_names.collect()]
-    t0 = time.perf_counter()
-    want = extract_mentions(turns, pats).count()
-    ac_sec = time.perf_counter() - t0
+    want = len(_oracle_keys(turns, pats))
     assert got == want
-    assert gaz_sec < 120 and ac_sec < 120  # bounded even on a throttled host
+    assert gaz_sec < 120  # bounded even on a throttled host
 
 
 def test_gazetteer_salted_join_equals_broadcast_on_hot_first_word(spark):
@@ -144,8 +160,8 @@ def test_gazetteer_salted_join_equals_broadcast_on_hot_first_word(spark):
 
 def test_gazetteer_punctuation_aliases_match_regex(spark):
     """Aliases starting/ending with non-word chars (.NET, C++) and nested
-    word-boundary traps (ML inside HTML) behave identically in both
-    extractors."""
+    word-boundary traps (ML inside HTML) match as the regex oracle finds
+    them."""
     t = spark.createDataFrame(
         [("c1", 0, "user", "use C++ and .NET and Neuro-linguistic programming today", "", None),
          ("c1", 1, "user", "nested ML in HTML but plain ML works; (ML) too", "", None)],
@@ -155,10 +171,7 @@ def test_gazetteer_punctuation_aliases_match_regex(spark):
         [("C++",), (".NET",), ("Neuro-linguistic programming",), ("ML",)], "alias string"
     )
     pats = ["C++", ".NET", "Neuro-linguistic programming", "ML"]
-    want = sorted(
-        (r["turn_idx"], r["start"], r["text"])
-        for r in extract_mentions(t, pats).collect()
-    )
+    want = sorted((k[1], k[2], k[4]) for k in _oracle_keys(t, pats))
     got = sorted(
         (r["turn_idx"], r["start"], r["text"])
         for r in extract_mentions_gazetteer(t, aliases).collect()
@@ -169,9 +182,9 @@ def test_gazetteer_punctuation_aliases_match_regex(spark):
 def test_gazetteer_unicode_aliases_match_extract_mentions(spark):
     """Aliases whose first word has non-ASCII letters (accents, umlauts,
     Devanagari with its combining vowel signs) join in the gazetteer
-    exactly as the in-row matcher finds them. The one pinned divergence:
-    an alias with no word character ("++") is matched in-row but has no
-    first word for the gazetteer to join on."""
+    exactly as the regex oracle finds them. The one pinned divergence:
+    an alias with no word character ("++") is matched by the oracle but has
+    no first word for the gazetteer to join on."""
     texts = [
         "Café Society met Élan Vital",
         "in Zürich: Über alles!",
@@ -183,69 +196,37 @@ def test_gazetteer_unicode_aliases_match_extract_mentions(spark):
     )
     pats = ["Café Society", "Élan Vital", "Zürich", "Über alles", "NLP", "हिन्दी", "++"]
     aliases = spark.createDataFrame([(p,) for p in pats], "alias string")
-    in_row = sorted(
-        (r["turn_idx"], r["start"], r["end"], r["text"])
-        for r in extract_mentions(t, pats).collect()
-    )
+    want = sorted(k[1:] for k in _oracle_keys(t, pats))
     gaz = sorted(
         (r["turn_idx"], r["start"], r["end"], r["text"])
         for r in extract_mentions_gazetteer(t, aliases).collect()
     )
-    assert [m[3] for m in in_row] == pats
-    assert gaz == [m for m in in_row if m[3] != "++"]
+    assert [m[3] for m in want] == pats
+    assert gaz == [m for m in want if m[3] != "++"]
 
 
-def _regex_spans(text, pats):
-    """Oracle for the in-row matcher: EntityRuler-style verbatim phrase match
-    as one longest-first regex alternation with word-boundary lookarounds,
-    scanned left to right (leftmost-longest, non-overlapping)."""
-    body = "|".join(re.escape(p) for p in sorted(set(pats), key=len, reverse=True))
-    rx = re.compile(rf"(?<!\w)(?:{body})(?!\w)")
-    return [
-        {"text": m.group(0), "start": m.start(), "end": m.end(), "label": None}
-        for m in rx.finditer(text)
-    ]
-
-
-def test_ac_engine_matches_regex(spark):
-    """extract_mentions (Aho-Corasick in a pandas UDF) returns the regex
-    oracle's spans, in order, on text exercising boundaries, overlaps,
-    longest-wins and repeats."""
-    texts = [
-        "NLP and machine learning beat HTML ML parsing; ML!",
-        "machine learning machine learninging learning machine",
-        "(NLP) ML-ops nlp NLP2 2NLP NLP",
-        "",
-        "no mentions at all here",
-    ]
-    t = spark.createDataFrame(
+def test_gazetteer_matches_regex_random_patterns(spark):
+    """Seeded random pattern sets over a small alphabet (dense overlaps,
+    shared prefixes and suffixes, boundary collisions), each run over the
+    same random texts: the gazetteer returns the regex oracle's spans, in
+    order."""
+    rng = random.Random(7)
+    texts = ["".join(rng.choice("ab_ .x") for _ in range(rng.randint(0, 40))) for _ in range(25)]
+    turns = spark.createDataFrame(
         [("c1", i, "user", s, "", None) for i, s in enumerate(texts)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    pats = ["NLP", "ML", "machine learning", "learning machine", "machine"]
-    want = [
-        (i, m["text"], m["start"], m["end"])
-        for i, s in enumerate(texts)
-        for m in _regex_spans(s, pats)
-    ]
-    got = [
-        (r["turn_idx"], r["text"], r["start"], r["end"])
-        for r in extract_mentions(t, pats).orderBy("turn_idx", "start").collect()
-    ]
-    assert want == got and len(want) > 5
-
-
-@settings(max_examples=300, deadline=None)
-@given(
-    pats=st.lists(st.text(alphabet="ab_ ", min_size=1, max_size=6), min_size=1, max_size=8),
-    text=st.text(alphabet="ab_ .x", max_size=40),
-)
-def test_ac_find_spans_matches_regex_property(pats, text):
-    """Property: the Aho-Corasick matcher (find_spans_ac) returns the regex
-    oracle's spans for arbitrary pattern sets and texts over a small
-    alphabet (dense overlaps, shared prefixes/suffixes, boundary
-    collisions)."""
-    pats = [p for p in pats if p.strip()]
-    if not pats:
-        return
-    assert find_spans_ac(text, AhoCorasick(pats), None) == _regex_spans(text, pats), (pats, text)
+    ).cache()
+    for _ in range(20):
+        pats = ["".join(rng.choice("ab_ ") for _ in range(rng.randint(1, 6)))
+                for _ in range(rng.randint(1, 8))]
+        pats = [p for p in pats if p.strip()]
+        if not pats:
+            continue
+        rx = _regex_oracle(pats)
+        want = [(i, *span) for i, s in enumerate(texts) for span in _regex_spans(s, rx)]
+        got = [
+            (r["turn_idx"], r["start"], r["end"], r["text"])
+            for r in gazetteer_mentions(turns, pats).orderBy("turn_idx", "start").collect()
+        ]
+        assert got == want, (pats, sorted(set(want) ^ set(got))[:5])
+    turns.unpersist()

@@ -44,11 +44,11 @@ def test_tfidf_transform_broadcasts_vocab(spark, golden_model):
 
 def _golden_links(spark, golden_model, **kw):
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from conftest import gazetteer_mentions
     from spacy_ann_linker_spark.pipeline import link_transcripts
 
     turns = generate_transcripts(spark, 32)
-    mentions = extract_mentions(turns, ["Research", "ML"])
+    mentions = gazetteer_mentions(turns, ["Research", "ML"])
     return link_transcripts(golden_model, turns, mentions=mentions, fuzzy_rescue=True, **kw)
 
 
@@ -57,6 +57,37 @@ def test_link_plan_has_no_cartesian_product(spark, golden_model):
     assert "CartesianProduct" not in plan
     # entity-vector dimension join is broadcast (linker.py broadcasts evecs)
     assert "BroadcastHashJoin" in plan
+
+
+def test_no_broadcast_link_shuffles_the_gazetteer_join(spark, golden_model):
+    """broadcast_kb=False reaches the default mention extraction too: with
+    size-based broadcasts off, the gazetteer's token->alias join on `_k`
+    plans as a shuffle join, and the links equal the default run's."""
+    import re
+
+    from spacy_ann_linker_spark.data.transcripts import generate_transcripts
+    from spacy_ann_linker_spark.link.linker import memo_scope
+    from spacy_ann_linker_spark.pipeline import link_transcripts
+
+    turns = generate_transcripts(spark, 32)
+    with memo_scope():
+        want = sorted(link_transcripts(golden_model, turns).collect())
+    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        with memo_scope():
+            links = link_transcripts(golden_model, turns, broadcast_kb=False)
+            plan = _plan(links)
+            got = sorted(links.collect())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
+    k_joins = [
+        block.split("\n", 1)[0]
+        for block in re.split(r"\n(?=\(\d+\) )", plan)
+        if "Join" in block.split("\n", 1)[0] and re.search(r"Left keys \[1\]: \[_k#", block)
+    ]
+    assert k_joins and not any("BroadcastHashJoin" in j for j in k_joins), k_joins
+    assert got == want and len(want) > 0
 
 
 def test_link_plan_does_not_nest_memo_plans(spark, golden_model):
@@ -184,11 +215,11 @@ def test_blocked_link_plan_shape(spark, golden_model):
     LSH/rescue union lineage."""
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
     from spacy_ann_linker_spark.link.linker import release_memos
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from conftest import gazetteer_mentions
     from spacy_ann_linker_spark.pipeline import link_transcripts
 
     turns = generate_transcripts(spark, 32)
-    mentions = extract_mentions(turns, ["Research", "ML"])
+    mentions = gazetteer_mentions(turns, ["Research", "ML"])
     links = link_transcripts(
         golden_model, turns, mentions=mentions, fuzzy_rescue=True, use_blocking=True
     )

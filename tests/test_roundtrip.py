@@ -26,7 +26,7 @@ def test_model_roundtrip_preserves_candidates(spark, golden_model, tmp_path):
 
 
 def test_reloaded_model_links_flagship(spark, golden_model, tmp_path):
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from conftest import gazetteer_mentions
     from spacy_ann_linker_spark.pipeline import link_transcripts
 
     path = str(tmp_path / "model2")
@@ -36,7 +36,7 @@ def test_reloaded_model_links_flagship(spark, golden_model, tmp_path):
         [("c1", 0, "user", "NLP is a highly researched subset of machine learning.", "", None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    m = extract_mentions(turns, ["NLP", "researched", "machine learning"])
+    m = gazetteer_mentions(turns, ["NLP", "researched", "machine learning"])
     links = link_transcripts(reloaded, turns, mentions=m, exact_fast_path=False)
     assert [r["entity_id"] for r in links.orderBy("start").collect()] == ["a3", "a15", "a1"]
 
@@ -49,7 +49,7 @@ def test_reloaded_model_links_at_its_own_dim(spark, tmp_path):
     import numpy as np
 
     from spacy_ann_linker_spark.data.word_vectors import mean_pool
-    from spacy_ann_linker_spark.mentions.extract import extract_mentions
+    from conftest import gazetteer_mentions
     from spacy_ann_linker_spark.pipeline import build_golden_model, link_transcripts
 
     path = str(tmp_path / "model_dim32")
@@ -61,7 +61,7 @@ def test_reloaded_model_links_at_its_own_dim(spark, tmp_path):
         [("c1", 0, "user", text, "", None)],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    m = extract_mentions(turns, ["NLP", "researched", "machine learning"])
+    m = gazetteer_mentions(turns, ["NLP", "researched", "machine learning"])
     links = link_transcripts(reloaded, turns, mentions=m).collect()
     assert len(links) == 3
     assert all(r["context_similarity"] is not None for r in links)
