@@ -12,6 +12,8 @@ import duckdb
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
+# Python workers import the package from PYTHONPATH, not the driver's sys.path
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 import __spark_entry__ as e
 from scripts.strict_oracle_check import TABLES, norm
 from spacy_ann_linker_spark.session import get_spark

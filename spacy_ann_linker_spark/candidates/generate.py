@@ -17,7 +17,8 @@ that survives a 1000-executor 100 TB run.
 Reference behaviors preserved:
   * J4 short-alias bypass: mention text exactly in short_aliases -> single
     candidate (alias=text, similarity=1.0), similarity search skipped
-    entirely ("bypass replaces", candidate_generator.py:257-259)
+    entirely ("bypass replaces", candidate_generator.py:257-259) — resolved
+    inside the distinct-texts memo (_resolved_texts)
   * J3 similarity = cosine (nmslib 1.0 - cosine-distance, :266-271)
   * T1 top-k, k=5 default (:37), ordered by similarity desc; ties broken by
     alias asc for determinism (nmslib tie order is unspecified). The order
@@ -26,14 +27,17 @@ Reference behaviors preserved:
     mathematically equal cosines (word permutations of one alias share one
     char_wb gram set) would otherwise rank by the physical plan
   * J5 exact-alias fast path (ann_kb.py:244-259) as an opt-in flag: at scale
-    most mentions are verbatim aliases and skip the expensive join
+    most mentions are verbatim aliases and skip the expensive join. It is
+    resolved in the same memo (the least alias of a case-folded hit, 1.0);
+    the TF-IDF transform and the join are built only over the texts neither
+    J4 nor J5 resolves, and not at all when every text resolves
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.kb.build import KnowledgeBase
@@ -180,71 +184,66 @@ def _sims_blocked(model: CandidateModel, rest: DataFrame) -> DataFrame:
     )
 
 
-def _candidate_branches(
+def _resolved_texts(
     model: CandidateModel,
     texts: DataFrame,
     exact_fast_path: bool,
-    use_blocking: bool = False,
-    max_gram_df: int | None = None,
     broadcast_kb: bool = True,
     memo_checkpoint_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame | None, DataFrame]:
-    """Shared branch plumbing: (distinct-texts memo, short-bypass rows,
-    exact-fast-path rows or None, raw similarity rows). Branches are
-    disjoint by text (each anti-join removes the previous branch's
-    population — U1 "bypass replaces" semantics,
-    candidate_generator.py:253-275)."""
-    # distinct mention strings feed three branches (short join, anti-join,
-    # vectorize) — materialize eagerly: a lazy persist is populated mid-job,
-    # so concurrent consumers in the same query would each recompute the
-    # dedup shuffle (measured 2-3x recompute). Cut like every link memo
-    # (see link/linker.py:_materialize_memo) and registered for release.
+) -> tuple[DataFrame, int, int]:
+    """The distinct-texts memo with J4 and J5 answered inside it ->
+    (memo(text, alias, similarity), texts, unresolved texts).
+
+    Each distinct text is left-joined to the short-alias set (J4, alias =
+    the text itself) and, with exact_fast_path, to the alias table folded
+    to `lower(alias) -> min(alias)` (J5, a case-folded verbatim hit). The
+    short alias wins, either gives similarity 1.0, and a text neither
+    resolves keeps NULL alias and similarity: only those reach the
+    similarity join ("bypass replaces", candidate_generator.py:253-275).
+    The memo is materialized eagerly and cut like every link memo (see
+    link/linker.py:_materialize_memo); its own action also observes the
+    unresolved count, so callers decide which later stages to build
+    without another job.
+
+    broadcast_kb=False (the 100M-alias gazetteer regime, where a full alias
+    broadcast OOMs driver and executors) runs the J5 join as a shuffle: the
+    key is the full case-folded string, near-unique on both sides, so there
+    is no hot key to salt and AQE sizes the exchange."""
     from spacy_ann_linker_spark.link.linker import _materialize_memo
 
-    texts = _materialize_memo(texts.select("text").distinct(), reliable_dir=memo_checkpoint_dir)
-
-    # J4 short-alias bypass (exact, case-sensitive, total)
-    short_df = model.short_aliases
-    short = (
-        texts.join(short_df, texts.text == short_df["alias"], "inner")
-        .select("text", "alias", F.lit(1.0).alias("similarity"))
-    )
-    rest = texts.join(short_df, texts.text == short_df["alias"], "left_anti")
-
-    exact = None
+    short = model.short_aliases.select(F.col("alias").alias("_short"))
+    memo = texts.select("text").distinct().join(short, F.col("text") == F.col("_short"), "left")
+    alias = F.col("_short")
     if exact_fast_path:
-        # J5: verbatim (case-folded) alias hits are cosine-1.0 by construction;
-        # answer them with a broadcast join and keep them out of the big join.
-        # broadcast_kb=False (the 100M-alias gazetteer regime, where a full
-        # alias broadcast OOMs driver + executors) runs the same two joins
-        # as shuffles instead: the key is the full case-folded string —
-        # near-unique on both sides (mentions arrive deduped, the alias
-        # table is distinct), so there is no hot key to salt and AQE sizes
-        # the exchange.
-        alias_lower = model.aliases.withColumn("_al", F.lower("alias"))
-        _bc = F.broadcast if broadcast_kb else (lambda df: df)
-        exact = (
-            rest.withColumn("_tl", F.lower("text"))
-            .join(_bc(alias_lower), F.col("_tl") == F.col("_al"), "inner")
-            .select("text", "alias", F.lit(1.0).alias("similarity"))
+        folded = model.aliases.groupBy(F.lower("alias").alias("_al")).agg(
+            F.min("alias").alias("_exact")
         )
-        # anti-join against the SAME alias_lower relation as the inner join
-        # above (duplicates on the right of a left_anti are irrelevant): the
-        # two broadcast subtrees then canonicalize identically, so one
-        # broadcast build is reused instead of a second distinct+broadcast
-        # job per link call.
-        rest = (
-            rest.withColumn("_tl", F.lower("text"))
-            .join(_bc(alias_lower), F.col("_tl") == F.col("_al"), "left_anti")
-            .drop("_tl")
+        memo = memo.join(
+            F.broadcast(folded) if broadcast_kb else folded,
+            F.lower("text") == F.col("_al"),
+            "left",
         )
+        alias = F.coalesce(alias, F.col("_exact"))
+    unresolved = Observation()
+    memo = memo.select(
+        "text", alias.alias("alias"), F.when(alias.isNotNull(), F.lit(1.0)).alias("similarity")
+    ).observe(unresolved, F.count_if(F.col("alias").isNull()).alias("n"))
+    memo, n_texts = _materialize_memo(memo, reliable_dir=memo_checkpoint_dir)
+    return memo, n_texts, unresolved.get["n"]
 
-    sims = (
-        _sims_blocked(model, rest)
-        if use_blocking
-        else _sims_exact(model, rest, max_gram_df=max_gram_df)
-    )
-    return texts, short, exact, sims
+
+def _similarities(
+    model: CandidateModel,
+    memo: DataFrame,
+    use_blocking: bool = False,
+    max_gram_df: int | None = None,
+) -> DataFrame:
+    """Raw similarity rows (text, alias, similarity) for the memo's
+    unresolved texts: the exact sparse join, or the blocked one."""
+    rest = memo.filter(F.col("alias").isNull()).select("text")
+    if use_blocking:
+        return _sims_blocked(model, rest)
+    return _sims_exact(model, rest, max_gram_df=max_gram_df)
 
 
 def generate_candidates(
@@ -260,15 +259,26 @@ def generate_candidates(
     of the reference's mention->alias memo table (ann_linker.py:94-97): each
     distinct string is scored once no matter how many billions of turns
     repeat it."""
-    _, short, exact, sims = _candidate_branches(model, texts, exact_fast_path)
+    memo, _, n_unresolved = _resolved_texts(model, texts, exact_fast_path)
+    out = memo.filter(F.col("alias").isNotNull()).withColumn("rank", F.lit(1))
+    if exact_fast_path:
+        # the memo keeps the least alias of a case-folded J5 hit; the top-k
+        # list keeps every alias of that fold at rank 1
+        short = model.short_aliases.select(F.col("alias").alias("text"))
+        folded = model.aliases.select(F.col("alias").alias("_a"), F.lower("alias").alias("_al"))
+        out = out.join(short, "text", "left_semi").unionByName(
+            out.join(short, "text", "left_anti")
+            .join(folded, F.lower("text") == F.col("_al"))
+            .select("text", F.col("_a").alias("alias"), "similarity", "rank")
+        )
+    if not n_unresolved:
+        return out
     w = Window.partitionBy("text").orderBy(tie_key().desc(), F.asc("alias"))
     topk = (
-        sims.withColumn("rank", F.row_number().over(w))
+        _similarities(model, memo)
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.lit(k))
     )
-    out = short.withColumn("rank", F.lit(1))
-    if exact is not None:
-        out = out.unionByName(exact.withColumn("rank", F.lit(1)))
     return out.unionByName(topk)
 
 
@@ -290,38 +300,45 @@ def generate_best_candidates(
     use_blocking routes the similarity branch through the LSH + sorted-
     neighborhood pair join (bounded at any scale); max_gram_df caps hot-gram
     posting lists on the exact join. Both default off = reference-exact."""
-    _, short, exact, sims = _candidate_branches(
+    return _best_candidates(
         model,
         texts,
         exact_fast_path,
         use_blocking=use_blocking,
         max_gram_df=max_gram_df,
         broadcast_kb=broadcast_kb,
-    )
-    return _best_of_branches(short, exact, sims)
+    )[1]
 
 
-def _best_of_branches(
-    short: DataFrame, exact: DataFrame | None, sims: DataFrame
-) -> DataFrame:
-    """The per-text argmax over _candidate_branches' disjoint branches."""
-    best_sim = (
-        sims.groupBy("text")
-        .agg(
-            F.min_by(
-                F.struct("alias", "similarity"),
-                F.struct((-tie_key()).alias("s"), F.col("alias").alias("a")),
-            ).alias("_b")
-        )
-        .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))
+def _best_candidates(
+    model: CandidateModel,
+    texts: DataFrame,
+    exact_fast_path: bool,
+    use_blocking: bool = False,
+    max_gram_df: int | None = None,
+    broadcast_kb: bool = True,
+    memo_checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame, int, int]:
+    """(distinct-texts memo, best candidate per text, texts, unresolved
+    texts): the memo's J4/J5 rows, plus — only when some text is
+    unresolved — the per-text argmax of the similarity rows (highest
+    tie_key, then alias asc; a hash aggregation, min_by over an ordering
+    struct, instead of a sort window)."""
+    memo, n_texts, n_unresolved = _resolved_texts(
+        model, texts, exact_fast_path, broadcast_kb=broadcast_kb,
+        memo_checkpoint_dir=memo_checkpoint_dir,
     )
-    out = short
-    if exact is not None:
-        best_exact = (
-            exact.groupBy("text")
-            .agg(F.min("alias").alias("alias"))
-            .withColumn("similarity", F.lit(1.0))
-            .select("text", "alias", "similarity")
+    best = memo.filter(F.col("alias").isNotNull())
+    if n_unresolved:
+        sims = _similarities(model, memo, use_blocking, max_gram_df)
+        best = best.unionByName(
+            sims.groupBy("text")
+            .agg(
+                F.min_by(
+                    F.struct("alias", "similarity"),
+                    F.struct((-tie_key()).alias("s"), F.col("alias").alias("a")),
+                ).alias("_b")
+            )
+            .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))
         )
-        out = out.unionByName(best_exact)
-    return out.unionByName(best_sim)
+    return memo, best, n_texts, n_unresolved

@@ -28,11 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from spacy_ann_linker_spark.candidates.generate import (
-    CandidateModel,
-    _best_of_branches,
-    _candidate_branches,
-)
+from spacy_ann_linker_spark.candidates.generate import CandidateModel, _best_candidates
 from spacy_ann_linker_spark.kb.build import KnowledgeBase
 from spacy_ann_linker_spark.link.embedding import (
     dot_product,
@@ -120,15 +116,18 @@ def memo_scope():
         _release_list(memos)
 
 
-def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> DataFrame:
-    """Materialize a memo table eagerly and cut its lineage.
+def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> tuple[DataFrame, int]:
+    """Materialize a memo table eagerly and cut its lineage -> (memo, rows).
 
-    Every link memo (distinct mention texts, the pre-rescue best aliases,
-    mention_alias_map) comes through here: an eager localCheckpoint, then
-    persist()+count() on top. The InMemoryRelation layered over the
-    checkpoint scan restores size stats and columnar scans (a bare
-    LogicalRDD reports unknown size — measured +45 CPU-s from lost
-    broadcast decisions).
+    Every link memo comes through here: an eager localCheckpoint, then
+    persist()+count() on top; the count is handed back. A best_aliases call
+    holds one memo when every distinct text resolves by J4/J5 (the
+    distinct-texts memo, which then is mention_alias_map too), two when
+    some text reaches the similarity join (+ the best-alias memo), and
+    three when the JW rescue runs (+ the rescued union). The
+    InMemoryRelation layered over the checkpoint scan restores size stats
+    and columnar scans (a bare LogicalRDD reports unknown size — measured
+    +45 CPU-s from lost broadcast decisions).
 
     Why every memo is cut: an uncut cached memo embeds the plan of the memo
     before it, so the link output's plan nests one copy of each upstream
@@ -174,14 +173,14 @@ def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> DataFra
         # the LogicalRDD's RDD holds the checkpoint blocks
         checkpoint_rdd = df._jdf.queryExecution().analyzed().rdd()
     out = df.persist()
-    out.count()
+    n = out.count()
     # remembered so release_memos/memo_scope exit frees them — memos are
     # per-request scratch, not caller-owned output
     out._memo_parquet_path = memo_path
     out._memo_checkpoint_rdd = checkpoint_rdd
     scope = _MEMO_SCOPE.get()
     (_PERSISTED_MEMOS if scope is None else scope).append(out)
-    return out
+    return out, n
 
 
 def release_memos() -> int:
@@ -209,7 +208,15 @@ def best_aliases(
 ) -> DataFrame:
     """(text, alias, similarity) — best surviving alias per distinct mention
     string (T2: `alias_candidates[0]` after the strict-> threshold filter).
-    This IS the mention_alias_map memo table (J8).
+    This IS the mention_alias_map memo table (J8), returned materialized
+    with its lineage cut and registered for release (see _materialize_memo).
+
+    The distinct-texts memo answers J4/J5 itself (generate.py
+    _resolved_texts); the similarity join runs only over the texts it left
+    unresolved and only when there are any, and the JW rescue only when
+    some text has no alias above `threshold`. When every text resolves
+    (the gazetteer emits verbatim aliases), the result is a filter over
+    that one memo and the call runs no TF-IDF, join or rescue stage.
 
     fuzzy_rescue (off for reference parity, on in the production pipeline):
     mention strings whose every cosine candidate fell below `threshold` get a
@@ -222,22 +229,23 @@ def best_aliases(
     broadcast_kb: True (default) broadcasts the alias tables — right for
     KB-sized alias sets, a hard OOM at a 100M-alias gazetteer. False
     switches the J5 exact-fast-path lookup (generate.py
-    _candidate_branches) to shuffle joins and the rescue's alias block
+    _resolved_texts) to a shuffle join and the rescue's alias block
     table to a SALTED shuffle join: the first-character block key has only
     ~|alphabet| distinct values, so without salting every 's...' alias
     lands on one reducer; aliases pick a deterministic salt from their own
     string, unmatched mentions replicate across all RESCUE_SALT_BUCKETS
     (identical result set, verified in tests)."""
-    # generate_best_candidates, inlined to keep its distinct-texts memo: the
-    # rescue below anti-joins against that memo instead of re-running the
-    # mention source (a cut memo is a checkpoint scan, so Spark's cache
-    # substitution cannot map a recomputed distinct onto it). Global argmax
+    # generate_best_candidates' core, which also hands back its distinct-texts
+    # memo and counts: the rescue below anti-joins against that memo instead of
+    # re-running the mention source (a cut memo is a checkpoint scan, so Spark's
+    # cache substitution cannot map a recomputed distinct onto it). Global argmax
     # == rank-1 of top-k for any k, so the linking path skips the top-k sort
-    # window entirely (hash aggregations only); strict > threshold applied
-    # after, same as filtering the k-list then taking [0]. use_blocking /
-    # max_gram_df (both off = reference-exact) bound the similarity join at
-    # scale: LSH+prefix pair blocking, or hot-gram df-cap.
-    texts, short, exact, sims = _candidate_branches(
+    # window entirely (hash aggregations only); strict > threshold applied after,
+    # same as filtering the k-list then taking [0]. use_blocking / max_gram_df
+    # (both off = reference-exact) bound the similarity join at scale: LSH+prefix
+    # pair blocking, or hot-gram df-cap. Each later stage is built only when the
+    # counts observed so far say some text reaches it.
+    memo, best, n_texts, n_unresolved = _best_candidates(
         model,
         texts,
         exact_fast_path,
@@ -246,20 +254,24 @@ def best_aliases(
         broadcast_kb=broadcast_kb,
         memo_checkpoint_dir=memo_checkpoint_dir,
     )
-    best = _best_of_branches(short, exact, sims).filter(
-        F.col("similarity") > F.lit(threshold)
-    )
-    if not fuzzy_rescue:
+    best = best.filter(F.col("similarity") > F.lit(threshold))
+    if n_unresolved:
+        # with the similarity join in it, best is mention_alias_map when no
+        # rescue follows, and otherwise feeds both the rescue's anti-join and
+        # the union (run concurrently in the final job, lazy evaluation
+        # recomputed the candidate-join subtree, measured ~3x wall): cut it
+        # like every memo; its count says whether the rescue is needed
+        best, n_best = _materialize_memo(best, reliable_dir=memo_checkpoint_dir)
+    else:
+        # every text resolved at similarity 1.0: best is a filter over the
+        # one memo, already cut, and passes the strict > unless threshold >= 1
+        n_best = n_texts if 1.0 > threshold else 0
+    if not fuzzy_rescue or n_best == n_texts:
         return best
-    # the pre-rescue result feeds both the anti-join and the union —
-    # materialize eagerly (both consumers run concurrently in the final job;
-    # lazy evaluation recomputed the whole candidate-join subtree, measured
-    # ~3x wall) and cut its lineage like every memo (see _materialize_memo)
-    best = _materialize_memo(best, reliable_dir=memo_checkpoint_dir)
 
     from spacy_ann_linker_spark.functions.stringsim import jaro_winkler_udf
 
-    unmatched = texts.join(best, "text", "left_anti")
+    unmatched = memo.select("text").join(best, "text", "left_anti")
     aliases = model.aliases.select(
         "alias",
         F.lower(F.substring("alias", 1, 1)).alias("_bk"),
@@ -302,7 +314,8 @@ def best_aliases(
         )
         .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))
     )
-    return best.unionByName(rescued)
+    out, _ = _materialize_memo(best.unionByName(rescued), reliable_dir=memo_checkpoint_dir)
+    return out
 
 
 def kb_get_candidates(
@@ -366,9 +379,10 @@ def link_mentions(
 ) -> DataFrame:
     """mentions (MENTION_SCHEMA) + turns (TRANSCRIPT_SCHEMA) -> links.
 
-    Every memo (distinct texts, the pre-rescue best aliases,
-    mention_alias_map) is materialized with its lineage cut (see
-    _materialize_memo). memo_checkpoint_dir: route each one through a
+    Every memo is materialized with its lineage cut (see
+    _materialize_memo); best_aliases hands mention_alias_map back already
+    cut, so a call where every mention text is a short or exact alias hit
+    holds exactly one memo. memo_checkpoint_dir: route each one through a
     RELIABLE parquet write+read instead of localCheckpoint — an executor
     loss then recomputes from files rather than failing the query;
     recommended for 1000-executor runs.
@@ -397,27 +411,23 @@ def link_mentions(
     similarity, entity_id, context_similarity). Mentions whose candidates all
     fall below threshold are absent (reference leaves those spans
     unannotated, ann_linker.py:90-91)."""
-    texts = mentions.select("text").distinct()
     # mention_alias_map is tiny (distinct mention strings) but its lineage is
-    # the whole candidate-generation DAG — materialize eagerly and cut it
-    # (see _materialize_memo), so the downstream consumers (candidate
-    # expansion, turns semi-join) scan the materialized blocks instead of
-    # recomputing the similarity join, dragging its plan into every task
-    # binary, or nesting it into the output plan AQE re-renders after every
-    # stage (J8 memo semantics)
-    mam = _materialize_memo(
-        best_aliases(
-            model,
-            texts,
-            threshold=threshold,
-            exact_fast_path=exact_fast_path,
-            fuzzy_rescue=fuzzy_rescue,
-            use_blocking=use_blocking,
-            max_gram_df=max_gram_df,
-            broadcast_kb=broadcast_kb,
-            memo_checkpoint_dir=memo_checkpoint_dir,
-        ),
-        reliable_dir=memo_checkpoint_dir,
+    # the whole candidate-generation DAG — best_aliases returns it cut (see
+    # _materialize_memo), so the downstream consumers (candidate expansion,
+    # turns semi-join) scan the materialized blocks instead of recomputing
+    # the similarity join, dragging its plan into every task binary, or
+    # nesting it into the output plan AQE re-renders after every stage (J8
+    # memo semantics)
+    mam = best_aliases(
+        model,
+        mentions.select("text"),
+        threshold=threshold,
+        exact_fast_path=exact_fast_path,
+        fuzzy_rescue=fuzzy_rescue,
+        use_blocking=use_blocking,
+        max_gram_df=max_gram_df,
+        broadcast_kb=broadcast_kb,
+        memo_checkpoint_dir=memo_checkpoint_dir,
     )
 
     # J6 alias -> entity expansion with uniform priors

@@ -143,3 +143,47 @@ def test_link_transcripts_rejects_unknown_option(spark, golden_model):
     mentions = gazetteer_mentions(turns, ["NLP"])
     with pytest.raises(TypeError):
         link_transcripts(golden_model, turns, mentions=mentions, k=5)
+
+
+# best_aliases(threshold=1.0, exact_fast_path=True, fuzzy_rescue=True) rows
+# computed before J4/J5 moved into the distinct-texts memo: short and exact
+# hits (similarity 1.0) fail the strict > and go to the JW rescue, which
+# finds them again at JW 1.0
+RESCUE_AT_ONE = [
+    ("ML", "ML", 1.0),
+    ("Machine lerning", "Machine learning", 0.9874999999999999),
+    ("NLP", "NLP", 1.0),
+    ("OS", "OS", 1.0),
+    ("Research", "Research", 1.0),
+    ("Reserch", "Research", 0.975),
+    ("machine learning", "Machine learning", 1.0),
+    ("ml", "ML", 1.0),
+    ("research", "Research", 1.0),
+]
+
+
+def test_threshold_one_sends_resolved_texts_to_the_rescue(spark, golden_model):
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    texts = ["Research", "research", "ML", "ml", "Reserch", "NLP", "machine learning",
+             "Machine lerning", "OS", "zzqqxv"]
+    t = spark.createDataFrame([(x,) for x in texts], "text string")
+    with memo_scope():
+        rows = best_aliases(
+            golden_model.cand, t, threshold=1.0, exact_fast_path=True, fuzzy_rescue=True
+        ).collect()
+    assert sorted((r["text"], r["alias"], r["similarity"]) for r in rows) == RESCUE_AT_ONE
+
+
+def test_zero_mentions_zero_links(spark, golden_model):
+    from spacy_ann_linker_spark.data.transcripts import generate_transcripts
+    from spacy_ann_linker_spark.link.linker import link_mentions, memo_scope
+    from spacy_ann_linker_spark.schemas import MENTION_SCHEMA
+
+    turns = generate_transcripts(spark, 4)
+    mentions = spark.createDataFrame([], MENTION_SCHEMA)
+    with memo_scope():
+        links = link_mentions(
+            mentions, turns, golden_model.kb, golden_model.cand, fuzzy_rescue=True
+        ).collect()
+    assert links == []

@@ -7,6 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
+# Spark jobs per call (test_link_job_budget, test_serve_request_job_budget),
+# each just above the count measured on a 4-core local[8] session
+JOB_BUDGET_RESOLVED = 34  # 55 before J4/J5 moved into the distinct-texts memo
+JOB_BUDGET_SIMILARITY = 61  # 58 before
+JOB_BUDGET_SERVE = 29  # 39 before
 
 
 def _plan(df) -> str:
@@ -42,13 +47,26 @@ def test_tfidf_transform_broadcasts_vocab(spark, golden_model):
     assert "BroadcastHashJoin" in plan
 
 
-def _golden_links(spark, golden_model, **kw):
+# a mention that is no alias: it reaches the similarity join and, its cosine
+# falling below the threshold, the JW rescue (-> "Research")
+TYPO = "Reserch"
+
+
+def _golden_links(spark, golden_model, typo=False, **kw):
+    """The gazetteer's verbatim "Research"/"ML" mentions over 32 turns, all
+    resolved inside the distinct-texts memo; typo=True adds one TYPO
+    mention on the first turn."""
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
+    from spacy_ann_linker_spark.schemas import MENTION_SCHEMA
     from conftest import gazetteer_mentions
     from spacy_ann_linker_spark.pipeline import link_transcripts
 
     turns = generate_transcripts(spark, 32)
     mentions = gazetteer_mentions(turns, ["Research", "ML"])
+    if typo:
+        mentions = mentions.unionByName(
+            spark.createDataFrame([("c00000000", 0, 1, TYPO, 0, 7, None)], MENTION_SCHEMA)
+        )
     return link_transcripts(golden_model, turns, mentions=mentions, fuzzy_rescue=True, **kw)
 
 
@@ -57,6 +75,36 @@ def test_link_plan_has_no_cartesian_product(spark, golden_model):
     assert "CartesianProduct" not in plan
     # entity-vector dimension join is broadcast (linker.py broadcasts evecs)
     assert "BroadcastHashJoin" in plan
+
+
+def _memo_plans(monkeypatch) -> list:
+    """Record the formatted plan of every memo a link call materializes: the
+    similarity join and the JW rescue sit behind memo cuts, so the output
+    plan never shows them."""
+    from spacy_ann_linker_spark.link import linker
+
+    plans = []
+    real = linker._materialize_memo
+
+    def spy(df, *a, **kw):
+        plans.append(_plan(df))
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(linker, "_materialize_memo", spy)
+    return plans
+
+
+def test_similarity_link_plan_has_no_cartesian_product(spark, golden_model, monkeypatch):
+    """The same audit over every plan of a call with a mention that reaches
+    the similarity join and the JW rescue: the three memos and the output."""
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    plans = _memo_plans(monkeypatch)
+    with memo_scope():
+        plans.append(_plan(_golden_links(spark, golden_model, typo=True)))
+    assert len(plans) == 4
+    assert not any("CartesianProduct" in p for p in plans)
+    assert all("BroadcastHashJoin" in p for p in plans)
 
 
 def test_no_broadcast_link_shuffles_the_gazetteer_join(spark, golden_model):
@@ -127,8 +175,12 @@ def test_link_memos_read_the_turns_once(spark, golden_model):
         assert reads.value == len(rows)
 
 
-@pytest.mark.parametrize("use_blocking", [False, True], ids=["exact", "blocked"])
-def test_memo_scope_exit_frees_checkpoint_blocks(spark, golden_model, use_blocking):
+@pytest.mark.parametrize(
+    "use_blocking,typo",
+    [(False, False), (True, False), (True, True)],
+    ids=["exact", "blocked", "blocked-similarity"],
+)
+def test_memo_scope_exit_frees_checkpoint_blocks(spark, golden_model, use_blocking, typo):
     """Leaving memo_scope() frees everything its memos hold — the cache AND
     the localCheckpoint blocks underneath — so a serve loop or a stream's
     micro-batches do not accumulate one persisted RDD per memo per call."""
@@ -138,7 +190,7 @@ def test_memo_scope_exit_frees_checkpoint_blocks(spark, golden_model, use_blocki
 
     def call():
         with memo_scope():
-            _golden_links(spark, golden_model, use_blocking=use_blocking).collect()
+            _golden_links(spark, golden_model, typo=typo, use_blocking=use_blocking).collect()
 
     call()  # first use materializes the model's lazily cached tables
     before = jsc.getPersistentRDDs().size()
@@ -196,7 +248,8 @@ def test_memo_lineage_truncation(spark):
         # inspect a consumer, the way link_mentions' joins actually see it
         return memo.filter(F.col("id") >= 0)._jdf.queryExecution().optimizedPlan().toString()
 
-    truncated = _materialize_memo(df)
+    truncated, rows = _materialize_memo(df)
+    assert rows == 64
     plan_t = downstream_plan(truncated)
     # the cached child is a checkpoint scan (LogicalRDD / Scan ExistingRDD),
     # not the original projection lineage
@@ -229,6 +282,129 @@ def test_blocked_link_plan_shape(spark, golden_model):
     # the memo feeding the final joins is the truncated checkpoint scan
     assert "ExistingRDD" in plan or "InMemoryTableScan" in plan, plan[:2000]
     release_memos()
+
+
+def test_blocked_similarity_link_plan_shape(spark, golden_model, monkeypatch):
+    """test_blocked_link_plan_shape with a mention that reaches the blocked
+    similarity join and the JW rescue: every memo plan and the output plan
+    keep the same properties, and the links equal the exact path's."""
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    with memo_scope():
+        want = sorted(_golden_links(spark, golden_model, typo=True).collect())
+    plans = _memo_plans(monkeypatch)
+    with memo_scope():
+        links = _golden_links(spark, golden_model, typo=True, use_blocking=True)
+        plans.append(_plan(links))
+        got = sorted(links.collect())
+    assert len(plans) == 4
+    assert not any("CartesianProduct" in p for p in plans)
+    assert all("BroadcastHashJoin" in p for p in plans)
+    # each memo after the first reads the one before it as a checkpoint scan
+    assert all("ExistingRDD" in p or "InMemoryTableScan" in p for p in plans[1:])
+    assert got == want and any(r["text"] == TYPO for r in got)
+
+
+def _sims_built(monkeypatch) -> list:
+    """Record each similarity-join plan the linker builds (exact or blocked;
+    the TF-IDF transform of mention texts is built only inside them)."""
+    from spacy_ann_linker_spark.candidates import generate
+
+    built = []
+    for name in ("_sims_exact", "_sims_blocked"):
+        real = getattr(generate, name)
+
+        def spy(*a, _real=real, _name=name, **kw):
+            built.append(_name)
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(generate, name, spy)
+    return built
+
+
+def _scoped_memos(fn):
+    """(result of fn, memos it registered) inside a fresh memo_scope."""
+    from spacy_ann_linker_spark.link import linker
+
+    with linker.memo_scope():
+        out = fn()
+        return out, len(linker._MEMO_SCOPE.get())
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_link_builds_only_the_stages_some_text_reaches(
+    spark, golden_model, monkeypatch, tmp_path, reliable
+):
+    """When every distinct text is a short or exact alias hit, the call
+    holds one memo and builds no TF-IDF, cosine-join or rescue stage; one
+    non-alias mention brings back the similarity join, the best-alias memo
+    and the rescued union. The counts that decide this are observed by the
+    memo's own action, also when memos go through parquet."""
+    kw = {"memo_checkpoint_dir": str(tmp_path)} if reliable else {}
+    built = _sims_built(monkeypatch)
+
+    links, memos = _scoped_memos(lambda: _golden_links(spark, golden_model, **kw).collect())
+    assert links and memos == 1 and built == []
+
+    links, memos = _scoped_memos(
+        lambda: _golden_links(spark, golden_model, typo=True, **kw).collect()
+    )
+    assert memos == 3 and built == ["_sims_exact"]
+    assert [(r["alias"], r["entity_id"]) for r in links if r["text"] == TYPO] == [
+        ("Research", "a15")
+    ]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs that fn() runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "typo,budget", [(False, JOB_BUDGET_RESOLVED), (True, JOB_BUDGET_SIMILARITY)],
+    ids=["resolved", "similarity"],
+)
+def test_link_job_budget(spark, golden_model, typo, budget):
+    """Fixed cost per call: the Spark jobs of one golden link_transcripts
+    call, memos and output collect included. Each bound sits just above
+    the count measured when it was set; the all-resolved call pays for no
+    similarity join, best-alias memo or rescue."""
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    def call():
+        with memo_scope():
+            _golden_links(spark, golden_model, typo=typo).collect()
+
+    call()  # first use materializes the model's lazily cached tables
+    assert _jobs(spark, call) <= budget
+
+
+def test_serve_request_job_budget(spark, golden_model):
+    """The Spark jobs of one serve.link_documents request (the golden
+    sentence, every span an alias hit) stay within their bound."""
+    from spacy_ann_linker_spark.link.serve import link_documents
+
+    docs = [{
+        "spans": [
+            {"text": "NLP", "start": 0, "end": 3, "label": "SKILL"},
+            {"text": "machine learning", "start": 37, "end": 53, "label": "SKILL"},
+        ],
+        "context": "NLP is a highly researched subset of machine learning.",
+    }]
+    link_documents(spark, golden_model, docs)  # warm the model's cached tables
+    assert _jobs(spark, lambda: link_documents(spark, golden_model, docs)) <= JOB_BUDGET_SERVE
 
 
 def test_ivf_assign_is_pure_projection_no_sort_window(spark):

@@ -166,10 +166,10 @@ def test_memo_scope_isolates_concurrent_callers(spark):
     from spacy_ann_linker_spark.link.linker import memo_scope, release_memos
 
     release_memos()  # drain any leftovers from earlier tests
-    df_global = linker_mod._materialize_memo(spark.range(4))
+    df_global, _ = linker_mod._materialize_memo(spark.range(4))
     with memo_scope():
-        a = linker_mod._materialize_memo(spark.range(5))
-        b = linker_mod._materialize_memo(spark.range(6))
+        a, _ = linker_mod._materialize_memo(spark.range(5))
+        b, _ = linker_mod._materialize_memo(spark.range(6))
         a.count(), b.count()
         # release inside the scope touches ONLY the scope's memos
         assert release_memos() == 2
@@ -182,7 +182,7 @@ def test_memo_scope_isolates_concurrent_callers(spark):
 
     def handler():
         with memo_scope():
-            linker_mod._materialize_memo(spark.range(7)).count()
+            linker_mod._materialize_memo(spark.range(7))[0].count()
             out.put(("inside", release_memos()))
         out.put(("after", linker_mod._PERSISTED_MEMOS == [df_global]))
 
