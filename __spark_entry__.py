@@ -56,10 +56,10 @@ def _local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     identical rows + schema; guide §4 "eliminate the Python boundary")."""
     import pandas as pd
 
-    cols = [c.strip().split()[0] for c in schema.split(",")]
-    return spark.createDataFrame(
-        pd.DataFrame([tuple(r) for r in rows], columns=cols), schema=schema
-    )
+    # the schema names the columns: createDataFrame maps pandas columns to
+    # its fields by position (a frame with no rows has no columns to map)
+    data = pd.DataFrame([tuple(r) for r in rows]) if rows else []
+    return spark.createDataFrame(data, schema=schema)
 
 
 def _emb_double(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1068,7 +1068,7 @@ def _q_multimodal(spark, sf_dir):
 
     aux = _ensure_flagship_aux()
     media = spark.read.parquet(f"{aux}/media.parquet")
-    return decode_features(media, fake=True).select(
+    return decode_features(media).select(
         "media_id", "kind", "n_bytes", "checksum", "width", "height"
     )
 
@@ -2892,19 +2892,20 @@ def oracle_sql() -> dict[str, str]:
           FROM documents
         ),
         cand AS (
-          SELECT coalesce(sum(n * (n - 1) // 2), 0) AS candidate_pairs FROM
+          SELECT CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS candidate_pairs FROM
             (SELECT count(*) AS n FROM base WHERE b IS NOT NULL GROUP BY b)
         ),
         gold AS (
-          SELECT coalesce(sum(n * (n - 1) // 2), 0) AS gold_pairs FROM
+          SELECT CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS gold_pairs FROM
             (SELECT count(*) AS n FROM base GROUP BY g)
         ),
         cov AS (
-          SELECT coalesce(sum(n * (n - 1) // 2), 0) AS covered_pairs FROM
+          SELECT CAST(coalesce(sum(n * (n - 1) // 2), 0) AS BIGINT) AS covered_pairs FROM
             (SELECT count(*) AS n FROM base WHERE b IS NOT NULL GROUP BY b, g)
         ),
         tot AS (
-          SELECT count(*) AS n_records, count(*) * (count(*) - 1) // 2 AS total_pairs
+          SELECT count(*) AS n_records,
+                 CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS total_pairs
           FROM base
         )
         SELECT n_records, total_pairs, candidate_pairs, gold_pairs, covered_pairs,

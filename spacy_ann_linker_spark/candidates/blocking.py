@@ -196,47 +196,6 @@ def sliding_window_sn_pairs(
     return probes.join(succ, "_rb").select("id_a", "id_b", "key_a", "key_b", "w_dist")
 
 
-def phonetic_block_pairs(
-    texts: DataFrame, aliases: DataFrame, salt_buckets: int = 0
-) -> DataFrame:
-    """(text, alias) pairs sharing the SOUNDEX code of their first token —
-    the classic phonetic blocking key (Odell & Russell 1918; standard in
-    FEBRL / census-style record linkage). Catches sound-alike variants the
-    character-level blocks miss: "Smith"/"Smyth" (S530) and
-    "Robert"/"Rupert" (R163) share no 3-char prefix, but map to the same
-    code. (Soundex keeps the first LETTER, so "Catherine"/"Kathryn" stay
-    apart — the known limitation Metaphone-family codes address; this
-    operator is one key in the union-of-blocks recipe, not the only one.)
-
-    Spark's JVM `soundex` is the standard American Soundex (first letter +
-    3 digits); pinned against an independent python implementation in
-    tests/test_blocking.py. Rows whose first token has no alphabetic
-    leading character keep soundex's pass-through code and still block
-    exactly. NULL/empty texts are dropped.
-
-    Same join/skew contract as sorted_neighborhood_pairs: 4-char soundex
-    codes are Zipf-hot on real name tables (S530...), so salt_buckets>0
-    salts the alias side and replicates the text side; pair set identical
-    (asserted in tests)."""
-    first = lambda c: F.element_at(F.split(F.trim(F.lower(c)), r"\s+"), 1)  # noqa: E731
-    t = texts.withColumn("_bk", F.soundex(first(F.col("text")))).filter(
-        F.col("_bk").isNotNull() & (F.col("_bk") != "")
-    )
-    a = aliases.withColumn("_bk", F.soundex(first(F.col("alias")))).filter(
-        F.col("_bk").isNotNull() & (F.col("_bk") != "")
-    )
-    if salt_buckets > 0:
-        from spacy_ann_linker_spark.operators.salted import salted_join
-
-        return (
-            salted_join(big=a, small=t, key="_bk", salt_buckets=salt_buckets,
-                        salt_source="alias")
-            .select("text", "alias")
-            .distinct()
-        )
-    return t.join(a, "_bk").select("text", "alias").distinct()
-
-
 def token_block_pairs(
     records: DataFrame,
     id_col: str = "id",
@@ -249,8 +208,8 @@ def token_block_pairs(
     is a block key; candidate pairs are records sharing >= min_common
     tokens, and `common_blocks` is the CBS edge weight (number of shared
     blocks), so min_common IS weight-edge pruning with a constant
-    threshold. Complements the linker-side blocks (LSH / prefix /
-    phonetic key texts against a gazetteer): this one is records×records
+    threshold. Complements the linker-side blocks (LSH / prefix
+    key texts against a gazetteer): this one is records×records
     over a single table — the dedup/ER shape.
 
     Cost is Σ_tok df(tok)² — the posting-list self-join — so the hot-token

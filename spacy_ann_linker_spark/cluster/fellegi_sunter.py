@@ -1,6 +1,6 @@
-"""Fellegi-Sunter probabilistic record linkage: pair scoring + EM weight
-estimation (Fellegi & Sunter 1969, "A Theory for Record Linkage"; the
-model behind Splink / FEBRL / the Census Bureau matchers).
+"""Fellegi-Sunter probabilistic record linkage: pair scoring (Fellegi &
+Sunter 1969, "A Theory for Record Linkage"; the model behind Splink /
+FEBRL / the Census Bureau matchers).
 
 This is the COMPARE/CLASSIFY stage of the ER pipeline this engine builds:
 
@@ -23,24 +23,21 @@ Scale shape:
     per-field log-weights are computed once at plan-build time and enter
     the plan as literals, so the whole score is constant-folded JVM
     arithmetic — zero shuffles, zero Python, runs where the pairs sit.
-  - `estimate_mu_em` aggregates the pair table ONCE (groupBy the k
-    agreement columns -> at most 3^k pattern-count rows, map-side
-    combined), then iterates EM on the driver over that tiny count table
-    in numpy. 10^10 pairs cost one linear pass; the EM loop never touches
-    the cluster again. This is how Splink runs EM on Spark.
+  - `fellegi_sunter_score_tf` adds one broadcast join per field against
+    a (value, tf) dimension, then the same literal projection.
 
 The reference has no probabilistic-linkage surface (it ranks candidates
 by TF-IDF cosine only); this is a beyond-reference ER operator like
 cluster/survivorship.py. Oracle: `fellegi_sunter_score` in
 __spark_entry__.py (identical double literals + same-order sums in DuckDB,
-value-exact); EM is iterative/non-SQL and is pinned in tests against an
-independent per-row python EM and a planted-truth recovery check.
+value-exact); `fs_tf_adjusted` is the TF-adjusted scorer's oracle. The
+m/u weights are inputs: this module does not estimate them.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Mapping, Sequence
+from typing import Mapping
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -150,97 +147,3 @@ def fellegi_sunter_score_tf(
     for t in terms[1:]:
         score = score + t
     return out.withColumn(score_col, score).drop(*[f"_tf_{f}" for f in w])
-
-
-def agreement_pattern_counts(pairs: DataFrame, fields: Sequence[str]) -> DataFrame:
-    """(field agreement values..., n_pairs): the sufficient statistic for
-    EM — one map-side-combined groupBy, at most 3^k rows out (0/1/NULL
-    per field)."""
-    cols = [F.col(f).cast("int").alias(f) for f in fields]
-    return pairs.select(*cols).groupBy(*fields).agg(F.count(F.lit(1)).alias("n_pairs"))
-
-
-def estimate_mu_em(
-    pairs: DataFrame,
-    fields: Sequence[str],
-    p_init: float = 0.1,
-    m_init: float = 0.9,
-    u_init: float = 0.1,
-    iters: int = 100,
-    tol: float = 1e-10,
-    clamp: float = 1e-6,
-) -> dict:
-    """Unsupervised EM estimation of the Fellegi-Sunter parameters from
-    the candidate-pair agreement vectors (the Splink/FEBRL approach):
-    latent match indicator, per-field Bernoulli agreement under each
-    class.
-
-    Distributed part: ONE linear aggregation of the pair table to
-    agreement-pattern counts (<= 3^k rows). EM then iterates on the
-    driver in numpy over those counts — each iteration is O(3^k * k),
-    independent of pair count. NULL field values are ignored in the
-    likelihood for that pattern (missing-at-random).
-
-    Returns {"p": match prior, "m": {field: m}, "u": {field: u},
-    "n_iters", "converged", "n_pairs"}. Parameters are clamped to
-    [clamp, 1-clamp] each step so weights stay finite. Deterministic:
-    same input -> same output, regardless of partitioning.
-    """
-    import numpy as np
-
-    rows = agreement_pattern_counts(pairs, fields).collect()
-    if not rows:
-        raise ValueError("no pairs to estimate from")
-    # deterministic pattern order: collect() order follows partitioning, and
-    # float reductions are order-sensitive — sort so the estimate is a pure
-    # function of the data (partition-invariance is tested)
-    rows = sorted(rows, key=lambda r: tuple(-2 if r[f] is None else int(r[f]) for f in fields))
-    k = len(fields)
-    pats = np.array(
-        [[(-1 if r[f] is None else int(r[f])) for f in fields] for r in rows],
-        dtype=np.int64,
-    )  # (P, k) with -1 for NULL
-    cnt = np.array([r["n_pairs"] for r in rows], dtype=np.float64)  # (P,)
-    obs = pats >= 0
-    agree = (pats == 1) & obs
-
-    p = float(p_init)
-    m = np.full(k, float(m_init))
-    u = np.full(k, float(u_init))
-    converged = False
-    it = 0
-    for it in range(1, iters + 1):
-        # E-step: P(match | pattern) via log-likelihoods (stable)
-        lm = np.where(obs, np.where(agree, np.log(m), np.log1p(-m)), 0.0).sum(axis=1)
-        lu = np.where(obs, np.where(agree, np.log(u), np.log1p(-u)), 0.0).sum(axis=1)
-        lp_m = math.log(p) + lm
-        lp_u = math.log(1.0 - p) + lu
-        hi = np.maximum(lp_m, lp_u)
-        g = np.exp(lp_m - hi) / (np.exp(lp_m - hi) + np.exp(lp_u - hi))  # (P,)
-        # M-step (weighted by pattern counts; per-field over observed only)
-        wm, wu = g * cnt, (1.0 - g) * cnt
-        new_p = wm.sum() / cnt.sum()
-        new_m = (wm[:, None] * agree).sum(axis=0) / np.maximum(
-            (wm[:, None] * obs).sum(axis=0), 1e-300
-        )
-        new_u = (wu[:, None] * agree).sum(axis=0) / np.maximum(
-            (wu[:, None] * obs).sum(axis=0), 1e-300
-        )
-        new_p = min(max(new_p, clamp), 1.0 - clamp)
-        new_m = np.clip(new_m, clamp, 1.0 - clamp)
-        new_u = np.clip(new_u, clamp, 1.0 - clamp)
-        delta = max(
-            abs(new_p - p), float(np.abs(new_m - m).max()), float(np.abs(new_u - u).max())
-        )
-        p, m, u = new_p, new_m, new_u
-        if delta < tol:
-            converged = True
-            break
-    return {
-        "p": p,
-        "m": {f: float(m[i]) for i, f in enumerate(fields)},
-        "u": {f: float(u[i]) for i, f in enumerate(fields)},
-        "n_iters": it,
-        "converged": converged,
-        "n_pairs": int(cnt.sum()),
-    }

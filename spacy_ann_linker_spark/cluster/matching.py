@@ -4,7 +4,7 @@ resolution.
 Connected components (cluster/cc.py) merges transitively: a chain
 a~b~c collapses even when a and c are nothing alike (the north-rule
 default, but also the classic over-merge failure on dense similarity
-graphs). KwikCluster (cluster/correlation.py) bounds that with pivots.
+graphs).
 This module is the OTHER end of the precision spectrum: keep a pair only
 when each side is the other's single best match. The surviving edges form
 a MATCHING — every record merges with at most one partner — which is the

@@ -1,15 +1,11 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via mapInPandas in Arrow batches.
 
-The decode step defaults to a deterministic STUB: with `fake=True` it
-produces a fake "decode" (shape + checksum derived from the bytes) so the
-Spark-side plumbing — schema, batching, partition sizing — is real and
-tested. With `fake=False`, images go through PIL when it is importable
-(import-if-available inside the executor batch fn; unit-tested when PIL
-exists, cleanly skipped otherwise); without PIL — as in this container —
-fake=False raises NotImplementedError at the exact boundary a cv2/PIL call
-belongs. Audio/video real decode stays a NotImplementedError boundary
-either way (librosa/ffmpeg are heavier deps than this repo carries).
+The decode step is a deterministic STUB: it produces a fake "decode"
+(shape + checksum derived from the bytes) so the Spark-side plumbing —
+schema, batching, partition sizing — is real and tested. A real
+cv2/PIL/librosa decode would replace the body of the batch function and
+keep its in/out shape.
 
 The fake decode is ORACLE-EXACT, not just deterministic: every derived
 column is a pure function of md5 over the payload's lowercase hex
@@ -26,18 +22,6 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
 
 _FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes int, checksum string, "
@@ -73,56 +57,7 @@ def synthesize_media(spark, n: int, seed: int = 42) -> DataFrame:
     )
 
 
-def _import_pil():
-    """Import-if-available PIL (runs inside the executor batch fn, once per
-    batch). Raises NotImplementedError — the documented real-media boundary —
-    when Pillow isn't installed."""
-    try:
-        from PIL import Image  # noqa: PLC0415 — executor-side optional dep
-    except ImportError as ex:
-        raise NotImplementedError(
-            "real media decode requires Pillow (pip install Pillow); "
-            "pass fake=True for the deterministic oracle-exact stub"
-        ) from ex
-    return Image
-
-
-def _decode_real(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Real image decode via PIL: width/height from the decoded image,
-    features = 8 grayscale means over a 4x2 thumbnail (a fixed-width stand-in
-    for a real embedding). Audio/video remain a NotImplementedError boundary
-    (librosa/ffmpeg); callers filter to kind='image' first."""
-    import io
-
-    Image = _import_pil()
-    kinds = set(pdf["kind"])
-    if kinds - {"image"}:
-        raise NotImplementedError(
-            f"real decode implemented for images only (got kinds {sorted(kinds)}); "
-            "filter to kind='image' — audio/video need librosa/ffmpeg"
-        )
-    payloads = [bytes(p or b"") for p in pdf["payload"]]
-    widths, heights, feats = [], [], []
-    for p in payloads:
-        with Image.open(io.BytesIO(p)) as im:
-            widths.append(im.width)
-            heights.append(im.height)
-            px = list(im.convert("L").resize((4, 2)).getdata())
-        feats.append([v / 255.0 for v in px])
-    return pd.DataFrame(
-        {
-            "media_id": pdf["media_id"].to_numpy(),
-            "kind": pdf["kind"].to_numpy(),
-            "n_bytes": [len(p) for p in payloads],
-            "checksum": [hashlib.md5(p.hex().encode()).hexdigest() for p in payloads],
-            "width": widths,
-            "height": heights,
-            "features": feats,
-        }
-    )
-
-
-def decode_features(df: DataFrame, fake: bool = True) -> DataFrame:
+def decode_features(df: DataFrame) -> DataFrame:
     """Decode + feature-extract each media payload. Arrow-batched
     mapInPandas: one pandas batch of binary payloads in, one batch of
     fixed-width feature rows out — the exact shape a real cv2/librosa decode
@@ -130,9 +65,6 @@ def decode_features(df: DataFrame, fake: bool = True) -> DataFrame:
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not fake:
-                yield _decode_real(pdf)
-                continue
             # column-wise over the Arrow batch (no iterrows): hashing is
             # inherently per-payload, everything else is list/ndarray ops.
             # checksum = md5 of the payload's LOWERCASE HEX — the cross-engine
@@ -156,68 +88,3 @@ def decode_features(df: DataFrame, fake: bool = True) -> DataFrame:
 
     return df.mapInPandas(op, schema=_FEATURE_SCHEMA)
 
-
-_RESIZE_SCHEMA = (
-    "media_id long, kind string, mime string, payload binary, "
-    "meta map<string,string>, width int, height int"
-)
-
-
-def resize_images(df: DataFrame, width: int = 64, height: int = 64, fake: bool = True) -> DataFrame:
-    """Image-resize stub: MEDIA_SCHEMA in -> MEDIA_SCHEMA + (width, height)
-    out, images only, payload REPLACED by the resized encoding — the exact
-    in/out shape of a real PIL/cv2 resize stage in a training-data pipeline
-    (non-image rows are filtered upstream of the Python stage, so the UDF
-    only ever sees work it must do). Arrow-batched mapInPandas; payload
-    bytes never pass through the driver.
-
-    fake=True derives the "resized" payload deterministically from the
-    source bytes + target size (blake2b keyed stream of width*height/16
-    bytes — output size scales with the requested resolution like a real
-    thumbnail would); fake=False decodes + resizes + re-encodes PNG through
-    PIL when importable, and raises NotImplementedError at the PIL boundary
-    otherwise (no image libs in this container)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not fake:
-                import io
-
-                Image = _import_pil()
-                out_payloads = []
-                for p in pdf["payload"]:
-                    with Image.open(io.BytesIO(bytes(p or b""))) as im:
-                        buf = io.BytesIO()
-                        im.resize((width, height)).save(buf, format="PNG")
-                    out_payloads.append(buf.getvalue())
-                out = pdf.copy()
-                out["payload"] = out_payloads
-                out["width"] = width
-                out["height"] = height
-                yield out
-                continue
-            n_out = max(16, width * height // 16)
-            out_payloads = []
-            for p in pdf["payload"]:
-                src = bytes(p or b"")
-                h = hashlib.blake2b(
-                    src, digest_size=32, person=f"{width}x{height}"[:16].encode()
-                ).digest()
-                out_payloads.append((h * (n_out // 32 + 1))[:n_out])
-            out = pdf.copy()
-            out["payload"] = out_payloads
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return df.filter(F.col("kind") == "image").mapInPandas(op, schema=_RESIZE_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling stub: emits (media_id, frame_idx) rows for
-    videos — the explode shape of a real ffmpeg frame extractor."""
-    return (
-        df.filter(F.col("kind") == "video")
-        .withColumn("frame_idx", F.explode(F.sequence(F.lit(0), F.lit(every_n - 1))))
-        .select("media_id", "frame_idx")
-    )

@@ -313,28 +313,6 @@ def rrf_fuse(
     )
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    **kwargs,
-) -> DataFrame:
-    """Top-k docs per query by BM25. Tie-break on doc_id ascending so the
-    cut is deterministic across partitionings (floating-point-equal scores
-    happen whenever two docs share tf/dl profiles)."""
-    from pyspark.sql import Window
-
-    scored = bm25_score(docs, queries, **kwargs)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
-
-
 def rocchio_prf_terms(
     docs: DataFrame,
     queries: DataFrame,

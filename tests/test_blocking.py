@@ -230,63 +230,6 @@ def test_sorted_neighborhood_salted_identical_on_zipf_hot_prefix(spark):
     assert len(p) == 2 * 320 + 80  # hot-block pairs present, Quark matches none
 
 
-def _py_soundex(word: str) -> str:
-    """Independent American Soundex reference (first letter + 3 digits,
-    H/W transparent between same-coded consonants, vowels reset)."""
-    codes = {}
-    for group, d in (("bfpv", "1"), ("cgjkqsxz", "2"), ("dt", "3"),
-                     ("l", "4"), ("mn", "5"), ("r", "6")):
-        for ch in group:
-            codes[ch] = d
-    w = "".join(c for c in word.lower() if c.isalpha())
-    if not w:
-        return word
-    out = w[0].upper()
-    prev = codes.get(w[0], "")
-    for c in w[1:]:
-        d = codes.get(c, "")
-        if d and d != prev:
-            out += d
-            if len(out) == 4:
-                break
-        if c not in "hw":
-            prev = d
-    return (out + "000")[:4]
-
-
-def test_phonetic_block_spark_soundex_matches_reference(spark):
-    """Pin Spark's JVM soundex against the independent python reference on
-    classic linkage names (the codes the operator blocks on)."""
-    words = ["Robert", "Rupert", "Ashcraft", "Ashcroft", "Tymczak", "Pfister",
-             "Honeyman", "Smith", "Smyth", "Catherine", "Kathryn", "Jackson",
-             "Washington", "Lee", "Gutierrez"]
-    df = spark.createDataFrame([(w,) for w in words], "w string")
-    got = {r["w"]: r["sx"] for r in df.select("w", F.soundex(F.lower("w")).alias("sx")).collect()}
-    for w in words:
-        assert got[w].upper() == _py_soundex(w), (w, got[w], _py_soundex(w))
-
-
-def test_phonetic_block_pairs_sound_alikes_and_salt_parity(spark):
-    from spacy_ann_linker_spark.candidates.blocking import phonetic_block_pairs
-
-    texts = spark.createDataFrame(
-        [("smyth",), ("ashcroft holdings",), ("rupert",), ("zzquux",)], "text string"
-    )
-    aliases = spark.createDataFrame(
-        [("Smith",), ("Ashcraft Works",), ("Robert",), ("Miller",)], "alias string"
-    )
-    plain = {(r["text"], r["alias"]) for r in phonetic_block_pairs(texts, aliases).collect()}
-    assert ("smyth", "Smith") in plain
-    assert ("ashcroft holdings", "Ashcraft Works") in plain
-    assert ("rupert", "Robert") in plain
-    assert not any(t == "zzquux" for t, _ in plain)
-    salted = {
-        (r["text"], r["alias"])
-        for r in phonetic_block_pairs(texts, aliases, salt_buckets=8).collect()
-    }
-    assert salted == plain
-
-
 # ---- token_block_pairs ------------------------------------------------------
 
 

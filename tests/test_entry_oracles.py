@@ -74,6 +74,17 @@ def _rows_equal(a, b):
     return True
 
 
+def test_blocking_quality_oracle_counts_are_int64(spark, duck):
+    """DuckDB types sum() over BIGINT as HUGEINT and `.df()` returns that as
+    float64, so equal counts would hash apart from Spark's bigint columns.
+    The oracle casts every pair count to BIGINT."""
+    counts = ["n_records", "total_pairs", "candidate_pairs", "gold_pairs", "covered_pairs"]
+    ddf = duck.sql(entry_mod.oracle_sql()["blocking_quality"]).df()
+    assert {c: str(ddf[c].dtype) for c in counts} == dict.fromkeys(counts, "int64")
+    sdf = entry_mod.queries()["blocking_quality"](spark, SF_DIR)
+    assert {c: t for c, t in sdf.dtypes if c in counts} == dict.fromkeys(counts, "bigint")
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

@@ -1,4 +1,4 @@
-"""cluster/fellegi_sunter.py: FS pair scoring and EM parameter estimation."""
+"""cluster/fellegi_sunter.py: FS pair scoring, plain and TF-adjusted."""
 
 import math
 
@@ -6,8 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.cluster.fellegi_sunter import (
-    agreement_pattern_counts,
-    estimate_mu_em,
     fellegi_sunter_score,
     fs_weights,
 )
@@ -58,114 +56,6 @@ def test_score_is_pure_projection(spark):
     )
     for node in ("Exchange", "Sort", "Aggregate", "Window"):
         assert node not in plan, plan[:2000]
-
-
-def test_pattern_counts(spark):
-    rows = [(1, 1), (1, 1), (1, 0), (None, 1)]
-    df = spark.createDataFrame(rows, "name int, phone int")
-    got = {
-        (r.name, r.phone): r.n_pairs
-        for r in agreement_pattern_counts(df, ["name", "phone"]).collect()
-    }
-    assert got == {(1, 1): 2, (1, 0): 1, (None, 1): 1}
-
-
-def _python_em_reference(rows, fields, p, m, u, iters, clamp=1e-6):
-    """Independent per-row EM (no pattern aggregation, no numpy) — the
-    naive textbook implementation the distributed one must reproduce."""
-    k = len(fields)
-    m, u = list(m), list(u)
-    for _ in range(iters):
-        gs = []
-        for r in rows:
-            lm = math.log(p)
-            lu = math.log(1.0 - p)
-            for i in range(k):
-                v = r[i]
-                if v is None:
-                    continue
-                lm += math.log(m[i]) if v == 1 else math.log(1.0 - m[i])
-                lu += math.log(u[i]) if v == 1 else math.log(1.0 - u[i])
-            hi = max(lm, lu)
-            g = math.exp(lm - hi) / (math.exp(lm - hi) + math.exp(lu - hi))
-            gs.append(g)
-        tot = len(rows)
-        p = min(max(sum(gs) / tot, clamp), 1.0 - clamp)
-        for i in range(k):
-            wm_a = sum(g for g, r in zip(gs, rows) if r[i] == 1)
-            wm_o = sum(g for g, r in zip(gs, rows) if r[i] is not None)
-            wu_a = sum((1 - g) for g, r in zip(gs, rows) if r[i] == 1)
-            wu_o = sum((1 - g) for g, r in zip(gs, rows) if r[i] is not None)
-            m[i] = min(max(wm_a / max(wm_o, 1e-300), clamp), 1.0 - clamp)
-            u[i] = min(max(wu_a / max(wu_o, 1e-300), clamp), 1.0 - clamp)
-    return p, m, u
-
-
-def test_em_matches_per_row_python_reference(spark):
-    rows = (
-        [(1, 1)] * 30 + [(1, 0)] * 10 + [(0, 1)] * 15
-        + [(0, 0)] * 200 + [(None, 1)] * 5 + [(1, None)] * 3
-    )
-    df = spark.createDataFrame(rows, "name int, phone int")
-    got = estimate_mu_em(df, ["name", "phone"], iters=7, tol=0.0)
-    p, m, u = _python_em_reference(
-        rows, ["name", "phone"], p=0.1, m=[0.9, 0.9], u=[0.1, 0.1], iters=7
-    )
-    assert got["n_iters"] == 7 and got["n_pairs"] == len(rows)
-    assert math.isclose(got["p"], p, rel_tol=1e-9)
-    for i, f in enumerate(["name", "phone"]):
-        assert math.isclose(got["m"][f], m[i], rel_tol=1e-9), f
-        assert math.isclose(got["u"][f], u[i], rel_tol=1e-9), f
-
-
-def test_em_recovers_planted_parameters(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    n = 20000
-    true_p, true_m, true_u = 0.2, [0.95, 0.85, 0.9], [0.05, 0.2, 0.1]
-    is_match = rng.random(n) < true_p
-    cols = []
-    for mi, ui in zip(true_m, true_u):
-        pr = np.where(is_match, mi, ui)
-        cols.append((rng.random(n) < pr).astype(int))
-    rows = [tuple(int(c[i]) for c in cols) for i in range(n)]
-    df = spark.createDataFrame(rows, "f1 int, f2 int, f3 int")
-    est = estimate_mu_em(df, ["f1", "f2", "f3"], iters=200, tol=1e-12)
-    assert abs(est["p"] - true_p) < 0.03
-    for f, mt, ut in zip(["f1", "f2", "f3"], true_m, true_u):
-        assert abs(est["m"][f] - mt) < 0.05, (f, est["m"][f], mt)
-        assert abs(est["u"][f] - ut) < 0.05, (f, est["u"][f], ut)
-
-
-def test_em_partition_invariant(spark):
-    rows = [(1, 1)] * 20 + [(0, 0)] * 80 + [(1, 0)] * 7
-    df = spark.createDataFrame(rows, "name int, phone int")
-    a = estimate_mu_em(df, ["name", "phone"], iters=15, tol=0.0)
-    b = estimate_mu_em(df.repartition(7), ["name", "phone"], iters=15, tol=0.0)
-    assert a == b
-
-
-def test_em_then_score_separates_planted_matches(spark):
-    """Composed: estimate weights unsupervised, score with them — planted
-    matches must land above planted non-matches on average."""
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    n = 5000
-    is_match = rng.random(n) < 0.25
-    f1 = np.where(rng.random(n) < np.where(is_match, 0.95, 0.05), 1, 0)
-    f2 = np.where(rng.random(n) < np.where(is_match, 0.9, 0.15), 1, 0)
-    rows = [(int(i), int(a), int(b), bool(t)) for i, (a, b, t) in enumerate(zip(f1, f2, is_match))]
-    df = spark.createDataFrame(rows, "pair_id int, f1 int, f2 int, gold boolean")
-    est = estimate_mu_em(df, ["f1", "f2"], iters=100)
-    weights = {f: (est["m"][f], est["u"][f]) for f in ["f1", "f2"]}
-    scored = fellegi_sunter_score(df, weights)
-    means = {
-        r.gold: r.avg
-        for r in scored.groupBy("gold").agg(F.avg("fs_score").alias("avg")).collect()
-    }
-    assert means[True] > means[False] + 1.0
 
 
 # ---- TF-adjusted scoring ----------------------------------------------------

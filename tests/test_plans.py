@@ -516,49 +516,6 @@ def test_dedup_simhash_is_pure_projection_no_shuffle(spark):
     assert "HashAggregate" not in plan and "SortAggregate" not in plan, plan[:2000]
 
 
-def test_bucketed_artifact_join_elides_exchanges(spark, tmp_path):
-    """operators/bucketed.py: two catalog tables bucketed on the same key
-    with the same bucket count join with NO Exchange on either side — the
-    one-time-layout answer to re-shuffling a static 100M-alias artifact on
-    every mention batch. Broadcast is disabled for the scope of the test —
-    bucketing is the lever precisely when the artifact is too big to
-    broadcast (on tiny test tables the planner rightly prefers
-    BroadcastHashJoin and marks the scan `Bucketed: false (disabled by
-    query planner)`). Also asserts the plain-parquet control DOES shuffle,
-    so the assertion can't pass vacuously."""
-    from spacy_ann_linker_spark.operators.bucketed import read_bucketed, write_bucketed
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bucketdemo LOCATION '{tmp_path}/wh'")
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        av = spark.range(2000).selectExpr("id % 130 AS idx", "rand(7) AS w_a")
-        mv = spark.range(500).selectExpr("id % 130 AS idx", "rand(11) AS w_m")
-        write_bucketed(av, "bucketdemo.alias_vectors", "idx", buckets=8)
-        write_bucketed(mv, "bucketdemo.mention_vectors", "idx", buckets=8)
-        a = read_bucketed(spark, "bucketdemo.alias_vectors")
-        m = read_bucketed(spark, "bucketdemo.mention_vectors")
-        joined = a.join(m, "idx")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan[:2000]
-        # sortBy in the layout also elides the SMJ's per-task Sort
-        assert "Bucketed: true" in plan, plan[:2000]
-
-        # control: the same join from plain parquet shuffles both sides
-        av.write.mode("overwrite").parquet(f"{tmp_path}/av")
-        mv.write.mode("overwrite").parquet(f"{tmp_path}/mv")
-        ctrl = spark.read.parquet(f"{tmp_path}/av").join(
-            spark.read.parquet(f"{tmp_path}/mv"), "idx"
-        )
-        assert "Exchange" in _plan(ctrl)
-
-        # same rows either way
-        assert joined.count() == ctrl.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP DATABASE IF EXISTS bucketdemo CASCADE")
-
-
 def test_qgram_edit_join_no_cartesian_and_bucketed_key(spark):
     """The q-gram candidate join must be a hash/merge EQUI-join on
     (gram, bucket) — never a nested-loop — and the verify must use the

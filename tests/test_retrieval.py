@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spacy_ann_linker_spark.evaluate import cluster_pairwise_metrics
-from spacy_ann_linker_spark.extras.retrieval import bm25_score, bm25_topk
+from spacy_ann_linker_spark.extras.retrieval import bm25_score
 
 DOCS = [
     ("d1", "the quick brown fox jumps over the lazy dog"),
@@ -91,17 +91,6 @@ def test_bm25_duplicate_query_terms_counted_once(spark, docs_df):
     a = sorted((r["doc_id"], r["score"]) for r in bm25_score(docs_df, one).collect())
     b = sorted((r["doc_id"], r["score"]) for r in bm25_score(docs_df, dup).collect())
     assert a == b
-
-
-def test_bm25_topk_deterministic_tiebreak(spark, docs_df):
-    qs = spark.createDataFrame([("q", "quick fox lazy dog")],
-                               "query_id string, query_text string")
-    top2 = bm25_topk(docs_df, qs, k=2)
-    rows = top2.orderBy(F.desc("score"), "doc_id").collect()
-    assert len(rows) == 2
-    full = {r["doc_id"]: r["score"] for r in bm25_score(docs_df, qs).collect()}
-    cutoff = sorted(full.values(), reverse=True)[1]
-    assert all(r["score"] >= cutoff for r in rows)
 
 
 def test_bm25_plan_is_jvm_only_with_broadcast_probe(spark, docs_df):
