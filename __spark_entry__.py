@@ -2357,7 +2357,8 @@ def _sweep_oracle_sql() -> str:
                  (SELECT sum(pos) FROM per) AS tot_pos
           FROM per
         )
-        SELECT threshold, tp, fp, (tot_pos - tp) AS fn,
+        SELECT threshold, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+               CAST(tot_pos - tp AS BIGINT) AS fn,
                round(tp * 1.0 / greatest(tp + fp, 1), 6) AS precision,
                round(tp * 1.0 / greatest(tot_pos, 1), 6) AS recall,
                round(CASE WHEN tp * 1.0 / greatest(tp + fp, 1)

@@ -18,7 +18,7 @@ Reference behaviors preserved:
   * J4 short-alias bypass: mention text exactly in short_aliases -> single
     candidate (alias=text, similarity=1.0), similarity search skipped
     entirely ("bypass replaces", candidate_generator.py:257-259) — resolved
-    inside the distinct-texts memo (_resolved_texts)
+    inside the mention memo (_resolved_mentions)
   * J3 similarity = cosine (nmslib 1.0 - cosine-distance, :266-271)
   * T1 top-k, k=5 default (:37), ordered by similarity desc; ties broken by
     alias asc for determinism (nmslib tie order is unspecified). The order
@@ -72,22 +72,34 @@ class CandidateModel:
     alias_vectors: DataFrame  # (alias, idx, weight) L2-normalized long form
     short_aliases: DataFrame  # (alias)
     aliases: DataFrame  # (alias) distinct fit corpus
-    # per-(num_hashes, bands) cache of the STATIC alias-side MinHash band
-    # keys (candidates/blocking.py): the alias table does not change between
-    # link calls, so the signature groupBys run once per model, not once per
-    # batch — the serve loop and streaming foreachBatch hit this every
-    # micro-batch. Persisted DataFrames, released with the model.
-    _alias_lsh_cache: dict = field(default_factory=dict, repr=False, compare=False)
+    # cache of STATIC alias-side tables: the MinHash band keys per
+    # (num_hashes, bands) (candidates/blocking.py) and the J5 case-fold
+    # table. The alias table does not change between link calls, so their
+    # groupBys run once per model, not once per batch — the serve loop and
+    # streaming foreachBatch hit this every micro-batch. Persisted
+    # DataFrames, released with the model.
+    _alias_cache: dict = field(default_factory=dict, repr=False, compare=False)
 
     def alias_band_keys(self, num_hashes: int, bands: int) -> DataFrame:
         from spacy_ann_linker_spark.candidates.blocking import minhash_band_keys
 
         key = (num_hashes, bands)
-        if key not in self._alias_lsh_cache:
-            self._alias_lsh_cache[key] = minhash_band_keys(
+        if key not in self._alias_cache:
+            self._alias_cache[key] = minhash_band_keys(
                 self.aliases, "alias", num_hashes, bands
             ).persist()
-        return self._alias_lsh_cache[key]
+        return self._alias_cache[key]
+
+    def folded_aliases(self) -> DataFrame:
+        """J5's case-fold table `(_al = lower(alias), _exact = least alias)`,
+        built and persisted once per model, like alias_band_keys."""
+        if "folded" not in self._alias_cache:
+            self._alias_cache["folded"] = (
+                self.aliases.groupBy(F.lower("alias").alias("_al"))
+                .agg(F.min("alias").alias("_exact"))
+                .persist()
+            )
+        return self._alias_cache["folded"]
 
     def save(self, path: str) -> None:
         self.tfidf.save(f"{path}/vocab")
@@ -184,40 +196,39 @@ def _sims_blocked(model: CandidateModel, rest: DataFrame) -> DataFrame:
     )
 
 
-def _resolved_texts(
+def _resolved_mentions(
     model: CandidateModel,
-    texts: DataFrame,
+    mentions: DataFrame,
     exact_fast_path: bool,
     broadcast_kb: bool = True,
     memo_checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, int, int]:
-    """The distinct-texts memo with J4 and J5 answered inside it ->
-    (memo(text, alias, similarity), texts, unresolved texts).
+    """The mention memo with J4 and J5 answered inside it ->
+    (memo(mention columns..., alias, similarity), rows, unresolved rows).
 
-    Each distinct text is left-joined to the short-alias set (J4, alias =
-    the text itself) and, with exact_fast_path, to the alias table folded
-    to `lower(alias) -> min(alias)` (J5, a case-folded verbatim hit). The
-    short alias wins, either gives similarity 1.0, and a text neither
-    resolves keeps NULL alias and similarity: only those reach the
-    similarity join ("bypass replaces", candidate_generator.py:253-275).
-    The memo is materialized eagerly and cut like every link memo (see
-    link/linker.py:_materialize_memo); its own action also observes the
-    unresolved count, so callers decide which later stages to build
-    without another job.
+    Each row (a mention, or a distinct text when the caller dedupes first)
+    is left-joined to the short-alias set (J4, alias = the text itself)
+    and, with exact_fast_path, to the model's case-fold table
+    `lower(alias) -> min(alias)` (J5, a case-folded verbatim hit). The
+    short alias wins, either gives similarity 1.0, and a row neither
+    resolves keeps NULL alias and similarity: only the distinct texts of
+    those rows reach the similarity join ("bypass replaces",
+    candidate_generator.py:253-275). The memo is materialized eagerly and
+    cut like every link memo (see link/linker.py:_materialize_memo); its
+    own action also observes the unresolved count, so callers decide which
+    later stages to build without another job.
 
     broadcast_kb=False (the 100M-alias gazetteer regime, where a full alias
     broadcast OOMs driver and executors) runs the J5 join as a shuffle: the
-    key is the full case-folded string, near-unique on both sides, so there
-    is no hot key to salt and AQE sizes the exchange."""
+    key is the full case-folded string, near-unique on the alias side, so
+    there is no hot key to salt and AQE sizes the exchange."""
     from spacy_ann_linker_spark.link.linker import _materialize_memo
 
     short = model.short_aliases.select(F.col("alias").alias("_short"))
-    memo = texts.select("text").distinct().join(short, F.col("text") == F.col("_short"), "left")
+    memo = mentions.join(short, F.col("text") == F.col("_short"), "left")
     alias = F.col("_short")
     if exact_fast_path:
-        folded = model.aliases.groupBy(F.lower("alias").alias("_al")).agg(
-            F.min("alias").alias("_exact")
-        )
+        folded = model.folded_aliases()
         memo = memo.join(
             F.broadcast(folded) if broadcast_kb else folded,
             F.lower("text") == F.col("_al"),
@@ -226,24 +237,80 @@ def _resolved_texts(
         alias = F.coalesce(alias, F.col("_exact"))
     unresolved = Observation()
     memo = memo.select(
-        "text", alias.alias("alias"), F.when(alias.isNotNull(), F.lit(1.0)).alias("similarity")
+        *mentions.columns,
+        alias.alias("alias"),
+        F.when(alias.isNotNull(), F.lit(1.0)).alias("similarity"),
     ).observe(unresolved, F.count_if(F.col("alias").isNull()).alias("n"))
-    memo, n_texts = _materialize_memo(memo, reliable_dir=memo_checkpoint_dir)
-    return memo, n_texts, unresolved.get["n"]
+    memo, n_rows = _materialize_memo(memo, reliable_dir=memo_checkpoint_dir)
+    return memo, n_rows, unresolved.get["n"]
 
 
 def _similarities(
     model: CandidateModel,
-    memo: DataFrame,
+    texts: DataFrame,
     use_blocking: bool = False,
     max_gram_df: int | None = None,
 ) -> DataFrame:
-    """Raw similarity rows (text, alias, similarity) for the memo's
-    unresolved texts: the exact sparse join, or the blocked one."""
-    rest = memo.filter(F.col("alias").isNull()).select("text")
+    """Raw similarity rows (text, alias, similarity) for distinct texts:
+    the exact sparse join, or the blocked one."""
     if use_blocking:
-        return _sims_blocked(model, rest)
-    return _sims_exact(model, rest, max_gram_df=max_gram_df)
+        return _sims_blocked(model, texts)
+    return _sims_exact(model, texts, max_gram_df=max_gram_df)
+
+
+def _best_unresolved(
+    model: CandidateModel,
+    memo: DataFrame,
+    threshold: float | None = None,
+    use_blocking: bool = False,
+    max_gram_df: int | None = None,
+) -> DataFrame:
+    """(text, alias, similarity): one row per distinct text the memo left
+    unresolved, with its argmax alias (highest tie_key, then alias asc; a
+    hash aggregation, min_by over an ordering struct, instead of a sort
+    window), or NULL alias and similarity when no candidate survives.
+
+    Each distinct text is scored once: the similarity join runs over the
+    unresolved texts made distinct, and the unresolved rows themselves join
+    the argmax's groupBy as NULL candidates, so every text gets its row
+    from that one exchange. With a threshold, only rows whose tie_key is at
+    least the rounded threshold reach the argmax, and the argmax keeps its
+    alias only when the raw similarity is strictly above the threshold.
+    Rounding is monotone, so a row cut early could never win and pass the
+    strict `>` — also when a tie at TIE_DIGITS straddles the threshold, where
+    the argmax picks the lower alias and a raw `>` pre-filter would not."""
+    unresolved = memo.filter(F.col("alias").isNull()).select("text")
+    sims = _similarities(model, unresolved.distinct(), use_blocking, max_gram_df)
+    if threshold is not None:
+        sims = sims.filter(tie_key() >= F.round(F.lit(threshold), TIE_DIGITS))
+    none = unresolved.select(
+        "text",
+        F.lit(None).cast("string").alias("alias"),
+        F.lit(None).cast("double").alias("similarity"),
+    )
+    best = (
+        sims.unionByName(none)
+        .groupBy("text")
+        .agg(
+            F.min_by(
+                F.struct("alias", "similarity"),
+                F.struct(
+                    F.col("alias").isNull().alias("u"),
+                    (-tie_key()).alias("s"),
+                    F.col("alias").alias("a"),
+                ),
+            ).alias("_b")
+        )
+        .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))
+    )
+    if threshold is None:
+        return best
+    keep = F.col("similarity") > F.lit(threshold)
+    return best.select(
+        "text",
+        F.when(keep, F.col("alias")).alias("alias"),
+        F.when(keep, F.col("similarity")).alias("similarity"),
+    )
 
 
 def generate_candidates(
@@ -259,7 +326,9 @@ def generate_candidates(
     of the reference's mention->alias memo table (ann_linker.py:94-97): each
     distinct string is scored once no matter how many billions of turns
     repeat it."""
-    memo, _, n_unresolved = _resolved_texts(model, texts, exact_fast_path)
+    memo, _, n_unresolved = _resolved_mentions(
+        model, texts.select("text").distinct(), exact_fast_path
+    )
     out = memo.filter(F.col("alias").isNotNull()).withColumn("rank", F.lit(1))
     if exact_fast_path:
         # the memo keeps the least alias of a case-folded J5 hit; the top-k
@@ -275,7 +344,7 @@ def generate_candidates(
         return out
     w = Window.partitionBy("text").orderBy(tie_key().desc(), F.asc("alias"))
     topk = (
-        _similarities(model, memo)
+        _similarities(model, memo.filter(F.col("alias").isNull()).select("text"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= F.lit(k))
     )
@@ -300,45 +369,13 @@ def generate_best_candidates(
     use_blocking routes the similarity branch through the LSH + sorted-
     neighborhood pair join (bounded at any scale); max_gram_df caps hot-gram
     posting lists on the exact join. Both default off = reference-exact."""
-    return _best_candidates(
-        model,
-        texts,
-        exact_fast_path,
-        use_blocking=use_blocking,
-        max_gram_df=max_gram_df,
-        broadcast_kb=broadcast_kb,
-    )[1]
-
-
-def _best_candidates(
-    model: CandidateModel,
-    texts: DataFrame,
-    exact_fast_path: bool,
-    use_blocking: bool = False,
-    max_gram_df: int | None = None,
-    broadcast_kb: bool = True,
-    memo_checkpoint_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame, int, int]:
-    """(distinct-texts memo, best candidate per text, texts, unresolved
-    texts): the memo's J4/J5 rows, plus — only when some text is
-    unresolved — the per-text argmax of the similarity rows (highest
-    tie_key, then alias asc; a hash aggregation, min_by over an ordering
-    struct, instead of a sort window)."""
-    memo, n_texts, n_unresolved = _resolved_texts(
-        model, texts, exact_fast_path, broadcast_kb=broadcast_kb,
-        memo_checkpoint_dir=memo_checkpoint_dir,
+    memo, _, n_unresolved = _resolved_mentions(
+        model, texts.select("text").distinct(), exact_fast_path, broadcast_kb=broadcast_kb
     )
     best = memo.filter(F.col("alias").isNotNull())
     if n_unresolved:
-        sims = _similarities(model, memo, use_blocking, max_gram_df)
         best = best.unionByName(
-            sims.groupBy("text")
-            .agg(
-                F.min_by(
-                    F.struct("alias", "similarity"),
-                    F.struct((-tie_key()).alias("s"), F.col("alias").alias("a")),
-                ).alias("_b")
-            )
-            .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))
+            _best_unresolved(model, memo, use_blocking=use_blocking, max_gram_df=max_gram_df)
+            .filter(F.col("alias").isNotNull())
         )
-    return memo, best, n_texts, n_unresolved
+    return best

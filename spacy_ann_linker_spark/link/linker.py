@@ -13,7 +13,9 @@ Reference behaviors preserved:
     comprehension whose result is discarded, ann_linker.py:84-88) — no
     parameter, no operator
   * J8 mention->best-alias memo (`mentions_to_alias_cand`, ann_linker.py:94-97)
-    = the `mention_alias_map` DataFrame returned by `best_aliases`
+    = the mention memo (_alias_memo): every mention resolved once, each
+    distinct text it leaves unresolved scored once; `best_aliases` is the
+    same core over distinct texts
   * J7/T3 disambiguation: cosine(entity_vector, context_vector) with +1e-8
     denominator guard (ann_linker.py:102-110), argmax with first-max-wins on
     ties = KB insertion order (np.argmax, :119) -> (desc(sim), asc(ent_pos))
@@ -24,11 +26,16 @@ from __future__ import annotations
 
 import contextvars
 from contextlib import contextmanager
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from spacy_ann_linker_spark.candidates.generate import CandidateModel, _best_candidates
+from spacy_ann_linker_spark.candidates.generate import (
+    CandidateModel,
+    _best_unresolved,
+    _resolved_mentions,
+)
 from spacy_ann_linker_spark.kb.build import KnowledgeBase
 from spacy_ann_linker_spark.link.embedding import (
     dot_product,
@@ -40,7 +47,7 @@ DEFAULT_THRESHOLD = 0.7  # ann_linker.py:49
 JW_THRESHOLD = 0.88  # fuzzy-rescue cut, strict >
 RESCUE_SALT_BUCKETS = 16  # salted rescue join fan-out when the KB is not broadcast
 
-# memo tables (mention_alias_map and the pre-rescue candidate set) registered
+# memo tables (the mention memo and the text->alias memos) registered
 # here so long-running callers (the serve loop, streaming foreachBatch) can
 # drop references after each request instead of waiting for driver GC +
 # ContextCleaner. Registration is SCOPED when a memo_scope() is active:
@@ -120,11 +127,12 @@ def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> tuple[D
     """Materialize a memo table eagerly and cut its lineage -> (memo, rows).
 
     Every link memo comes through here: an eager localCheckpoint, then
-    persist()+count() on top; the count is handed back. A best_aliases call
-    holds one memo when every distinct text resolves by J4/J5 (the
-    distinct-texts memo, which then is mention_alias_map too), two when
-    some text reaches the similarity join (+ the best-alias memo), and
-    three when the JW rescue runs (+ the rescued union). The
+    persist()+count() on top; the count is handed back. A link call holds
+    one memo when every mention resolves by J4/J5 (the mention memo), two
+    when some text reaches the similarity join (+ the text->alias memo of
+    the distinct unresolved texts), and three when the JW rescue runs (+
+    the rescued union); best_aliases holds the same memos over distinct
+    texts (see _alias_memo). The
     InMemoryRelation layered over the checkpoint scan restores size stats
     and columnar scans (a bare LogicalRDD reports unknown size — measured
     +45 CPU-s from lost broadcast decisions).
@@ -152,10 +160,13 @@ def _materialize_memo(df: DataFrame, reliable_dir: str | None = None) -> tuple[D
     the same way, but the materialized bytes live in the (replicated /
     re-readable) filesystem rather than unreplicated executor block storage,
     so an executor loss recomputes from the files instead of failing the
-    query. Costs one write+read round trip per memo; memos are
-    distinct-mention-sized, so at 1000-executor scale this is the safe
-    default and localCheckpoint is the latency optimization (the same swap
-    point plans/checkpoint.py documents for Iceberg).
+    query. Costs one write+read round trip per memo. The first memo of a
+    link call holds one row per mention (the later ones one per distinct
+    unresolved text) — at scale that still costs less than tokenizing every
+    turn again, which is what re-reading a lazy mention source means — so
+    at 1000-executor scale this is the safe default and localCheckpoint is
+    the latency optimization (the same swap point plans/checkpoint.py
+    documents for Iceberg).
 
     release_memos()/memo_scope() exit frees everything a memo holds: the
     cache, the checkpoint blocks and the parquet dir (request-scoped scratch
@@ -195,83 +206,12 @@ def release_memos() -> int:
     return _release_list(_PERSISTED_MEMOS if scope is None else scope)
 
 
-def best_aliases(
-    model: CandidateModel,
-    texts: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    exact_fast_path: bool = False,
-    fuzzy_rescue: bool = False,
-    use_blocking: bool = False,
-    max_gram_df: int | None = None,
-    broadcast_kb: bool = True,
-    memo_checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """(text, alias, similarity) — best surviving alias per distinct mention
-    string (T2: `alias_candidates[0]` after the strict-> threshold filter).
-    This IS the mention_alias_map memo table (J8), returned materialized
-    with its lineage cut and registered for release (see _materialize_memo).
-
-    The distinct-texts memo answers J4/J5 itself (generate.py
-    _resolved_texts); the similarity join runs only over the texts it left
-    unresolved and only when there are any, and the JW rescue only when
-    some text has no alias above `threshold`. When every text resolves
-    (the gazetteer emits verbatim aliases), the result is a filter over
-    that one memo and the call runs no TF-IDF, join or rescue stage.
-
-    fuzzy_rescue (off for reference parity, on in the production pipeline):
-    mention strings whose every cosine candidate fell below `threshold` get a
-    second chance via Jaro-Winkler (> JW_THRESHOLD) against
-    blocking-key-compatible aliases (same first lowercase character,
-    |length delta| <= 4) — the north_star's JW/Levenshtein scoring stage.
-    Char-level edits destroy most of a short word's 3-grams (cosine
-    collapses) while JW degrades gracefully.
-
-    broadcast_kb: True (default) broadcasts the alias tables — right for
-    KB-sized alias sets, a hard OOM at a 100M-alias gazetteer. False
-    switches the J5 exact-fast-path lookup (generate.py
-    _resolved_texts) to a shuffle join and the rescue's alias block
-    table to a SALTED shuffle join: the first-character block key has only
-    ~|alphabet| distinct values, so without salting every 's...' alias
-    lands on one reducer; aliases pick a deterministic salt from their own
-    string, unmatched mentions replicate across all RESCUE_SALT_BUCKETS
-    (identical result set, verified in tests)."""
-    # generate_best_candidates' core, which also hands back its distinct-texts
-    # memo and counts: the rescue below anti-joins against that memo instead of
-    # re-running the mention source (a cut memo is a checkpoint scan, so Spark's
-    # cache substitution cannot map a recomputed distinct onto it). Global argmax
-    # == rank-1 of top-k for any k, so the linking path skips the top-k sort
-    # window entirely (hash aggregations only); strict > threshold applied after,
-    # same as filtering the k-list then taking [0]. use_blocking / max_gram_df
-    # (both off = reference-exact) bound the similarity join at scale: LSH+prefix
-    # pair blocking, or hot-gram df-cap. Each later stage is built only when the
-    # counts observed so far say some text reaches it.
-    memo, best, n_texts, n_unresolved = _best_candidates(
-        model,
-        texts,
-        exact_fast_path,
-        use_blocking=use_blocking,
-        max_gram_df=max_gram_df,
-        broadcast_kb=broadcast_kb,
-        memo_checkpoint_dir=memo_checkpoint_dir,
-    )
-    best = best.filter(F.col("similarity") > F.lit(threshold))
-    if n_unresolved:
-        # with the similarity join in it, best is mention_alias_map when no
-        # rescue follows, and otherwise feeds both the rescue's anti-join and
-        # the union (run concurrently in the final job, lazy evaluation
-        # recomputed the candidate-join subtree, measured ~3x wall): cut it
-        # like every memo; its count says whether the rescue is needed
-        best, n_best = _materialize_memo(best, reliable_dir=memo_checkpoint_dir)
-    else:
-        # every text resolved at similarity 1.0: best is a filter over the
-        # one memo, already cut, and passes the strict > unless threshold >= 1
-        n_best = n_texts if 1.0 > threshold else 0
-    if not fuzzy_rescue or n_best == n_texts:
-        return best
-
+def _jw_rescue(model: CandidateModel, unmatched: DataFrame, broadcast_kb: bool) -> DataFrame:
+    """(text, alias, similarity): the best Jaro-Winkler alias (> JW_THRESHOLD)
+    for each distinct unmatched text, among blocking-key-compatible aliases
+    (same first lowercase character, |length delta| <= 4)."""
     from spacy_ann_linker_spark.functions.stringsim import jaro_winkler_udf
 
-    unmatched = memo.select("text").join(best, "text", "left_anti")
     aliases = model.aliases.select(
         "alias",
         F.lower(F.substring("alias", 1, 1)).alias("_bk"),
@@ -304,7 +244,7 @@ def best_aliases(
         .withColumn("similarity", jaro_winkler_udf(F.col("text"), F.col("alias")))
         .filter(F.col("similarity") > F.lit(JW_THRESHOLD))
     )
-    rescued = (
+    return (
         blocked.groupBy("text")
         .agg(
             F.min_by(
@@ -314,8 +254,123 @@ def best_aliases(
         )
         .select("text", F.col("_b.alias").alias("alias"), F.col("_b.similarity").alias("similarity"))
     )
-    out, _ = _materialize_memo(best.unionByName(rescued), reliable_dir=memo_checkpoint_dir)
-    return out
+
+
+def _alias_memo(
+    model: CandidateModel,
+    rows: DataFrame,
+    threshold: float,
+    exact_fast_path: bool,
+    fuzzy_rescue: bool,
+    use_blocking: bool,
+    max_gram_df: int | None,
+    broadcast_kb: bool,
+    memo_checkpoint_dir: str | None,
+) -> DataFrame:
+    """rows (a `text` column plus any others) -> the same rows with (alias,
+    similarity) attached, for every row whose text has an alias above
+    `threshold` (or a JW-rescued one); the J8 memo at row grain.
+
+    The rows are read once, by the first memo's action (_resolved_mentions:
+    J4/J5 answered per row, the unresolved count observed). The similarity
+    join and argmax run over the distinct texts it left unresolved, and
+    only when there are any (_best_unresolved, cut as the text->alias memo,
+    its own action observing how many texts found no alias). The JW rescue
+    runs only when some text is left without one — or, at threshold >= 1,
+    when some J4/J5 hit fails the strict > at similarity 1.0 — and its
+    union with the scored texts is cut too. The result reads only memos:
+    the resolved rows, plus the other rows joined to the text->alias memo."""
+    memo, n_rows, n_unresolved = _resolved_mentions(
+        model, rows, exact_fast_path, broadcast_kb=broadcast_kb,
+        memo_checkpoint_dir=memo_checkpoint_dir,
+    )
+    resolved_pass = 1.0 > threshold
+    scored = None
+    unmatched = []
+    if n_unresolved:
+        no_alias = Observation()
+        scored, _ = _materialize_memo(
+            _best_unresolved(model, memo, threshold, use_blocking, max_gram_df).observe(
+                no_alias, F.count_if(F.col("alias").isNull()).alias("n")
+            ),
+            reliable_dir=memo_checkpoint_dir,
+        )
+        if no_alias.get["n"]:
+            unmatched.append(scored.filter(F.col("alias").isNull()).select("text"))
+        scored = scored.filter(F.col("alias").isNotNull())
+    if not resolved_pass and n_rows > n_unresolved:
+        unmatched.append(memo.filter(F.col("alias").isNotNull()).select("text").distinct())
+    if fuzzy_rescue and unmatched:
+        rescued = _jw_rescue(model, reduce(DataFrame.unionByName, unmatched), broadcast_kb)
+        scored, _ = _materialize_memo(
+            rescued if scored is None else scored.unionByName(rescued),
+            reliable_dir=memo_checkpoint_dir,
+        )
+    out = memo.filter(F.col("similarity") > F.lit(threshold))
+    if scored is None:
+        return out
+    rest = memo.filter(F.col("alias").isNull()) if resolved_pass else memo
+    return out.unionByName(rest.drop("alias", "similarity").join(scored, "text"))
+
+
+def best_aliases(
+    model: CandidateModel,
+    texts: DataFrame,
+    threshold: float = DEFAULT_THRESHOLD,
+    exact_fast_path: bool = False,
+    fuzzy_rescue: bool = False,
+    use_blocking: bool = False,
+    max_gram_df: int | None = None,
+    broadcast_kb: bool = True,
+    memo_checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """(text, alias, similarity) — best surviving alias per distinct mention
+    string (T2: `alias_candidates[0]` after the strict-> threshold filter).
+    It is link_mentions' memo core (_alias_memo) run over
+    `texts.select("text").distinct()`: it reads only memos, each
+    materialized with its lineage cut and registered for release (see
+    _materialize_memo).
+
+    The first memo answers J4/J5 itself (generate.py _resolved_mentions);
+    the similarity join runs only over the texts it left unresolved and
+    only when there are any, and the JW rescue only when some text has no
+    alias above `threshold`. When every text resolves, the result is a
+    filter over that one memo and the call runs no TF-IDF, join or rescue
+    stage. Similarity rows below the rounded threshold never reach the
+    argmax (see generate.py _best_unresolved).
+
+    fuzzy_rescue (off for reference parity, on in the production pipeline):
+    mention strings whose every cosine candidate fell below `threshold` get a
+    second chance via Jaro-Winkler (> JW_THRESHOLD) against
+    blocking-key-compatible aliases (same first lowercase character,
+    |length delta| <= 4) — the north_star's JW/Levenshtein scoring stage.
+    Char-level edits destroy most of a short word's 3-grams (cosine
+    collapses) while JW degrades gracefully.
+
+    use_blocking / max_gram_df (both off = reference-exact) bound the
+    similarity join at scale: LSH + prefix pair blocking, or a hot-gram df
+    cap.
+
+    broadcast_kb: True (default) broadcasts the alias tables — right for
+    KB-sized alias sets, a hard OOM at a 100M-alias gazetteer. False
+    switches the J5 exact-fast-path lookup (generate.py
+    _resolved_mentions) to a shuffle join and the rescue's alias block
+    table to a SALTED shuffle join: the first-character block key has only
+    ~|alphabet| distinct values, so without salting every 's...' alias
+    lands on one reducer; aliases pick a deterministic salt from their own
+    string, unmatched mentions replicate across all RESCUE_SALT_BUCKETS
+    (identical result set, verified in tests)."""
+    return _alias_memo(
+        model,
+        texts.select("text").distinct(),
+        threshold,
+        exact_fast_path,
+        fuzzy_rescue,
+        use_blocking,
+        max_gram_df,
+        broadcast_kb,
+        memo_checkpoint_dir,
+    )
 
 
 def kb_get_candidates(
@@ -379,13 +434,17 @@ def link_mentions(
 ) -> DataFrame:
     """mentions (MENTION_SCHEMA) + turns (TRANSCRIPT_SCHEMA) -> links.
 
-    Every memo is materialized with its lineage cut (see
-    _materialize_memo); best_aliases hands mention_alias_map back already
-    cut, so a call where every mention text is a short or exact alias hit
-    holds exactly one memo. memo_checkpoint_dir: route each one through a
-    RELIABLE parquet write+read instead of localCheckpoint — an executor
-    loss then recomputes from files rather than failing the query;
-    recommended for 1000-executor runs.
+    The mention source is read once: the first memo holds every mention
+    with its J4/J5 alias (see _alias_memo), each distinct text it leaves
+    unresolved is scored once, and the output pass — alias->entity
+    expansion, the turn semi-join and scoring — reads only memos, so a
+    lazy source (the gazetteer's tokenizer UDF over every turn) is not
+    run again. Every memo is materialized with its lineage cut (see
+    _materialize_memo); a call where every mention text is a short or
+    exact alias hit holds exactly one memo. memo_checkpoint_dir: route each
+    one through a RELIABLE parquet write+read instead of localCheckpoint —
+    an executor loss then recomputes from files rather than failing the
+    query; recommended for 1000-executor runs.
 
     word_vectors_table: optional `(token, vector)` table — context embedding
     runs as the pure-JVM table-backed mean-pool (see context_vectors). With
@@ -411,31 +470,20 @@ def link_mentions(
     similarity, entity_id, context_similarity). Mentions whose candidates all
     fall below threshold are absent (reference leaves those spans
     unannotated, ann_linker.py:90-91)."""
-    # mention_alias_map is tiny (distinct mention strings) but its lineage is
-    # the whole candidate-generation DAG — best_aliases returns it cut (see
-    # _materialize_memo), so the downstream consumers (candidate expansion,
-    # turns semi-join) scan the materialized blocks instead of recomputing
-    # the similarity join, dragging its plan into every task binary, or
-    # nesting it into the output plan AQE re-renders after every stage (J8
-    # memo semantics)
-    mam = best_aliases(
+    linked = _alias_memo(
         model,
-        mentions.select("text"),
-        threshold=threshold,
-        exact_fast_path=exact_fast_path,
-        fuzzy_rescue=fuzzy_rescue,
-        use_blocking=use_blocking,
-        max_gram_df=max_gram_df,
-        broadcast_kb=broadcast_kb,
-        memo_checkpoint_dir=memo_checkpoint_dir,
+        mentions.select("conv_id", "turn_idx", "mention_id", "text", "start", "end", "label"),
+        threshold,
+        exact_fast_path,
+        fuzzy_rescue,
+        use_blocking,
+        max_gram_df,
+        broadcast_kb,
+        memo_checkpoint_dir,
     )
 
     # J6 alias -> entity expansion with uniform priors
-    cands = mam.join(kb.alias_map, "alias").select(
-        "text", "alias", "similarity", "entity_id", "prior", "ent_pos"
-    )
-
-    matched = mentions.join(cands, "text")
+    matched = linked.join(kb.alias_map, "alias")
 
     if not disambiguate:
         return matched.select(

@@ -85,6 +85,17 @@ def test_blocking_quality_oracle_counts_are_int64(spark, duck):
     assert {c: t for c, t in sdf.dtypes if c in counts} == dict.fromkeys(counts, "bigint")
 
 
+def test_threshold_sweep_oracle_counts_are_int64(spark, duck):
+    """The threshold_sweep oracle's cumulative counts are window sums over
+    BIGINT, which DuckDB also types as HUGEINT; the oracle casts tp, fp and
+    fn to BIGINT so they match Spark's bigint columns."""
+    counts = ["tp", "fp", "fn"]
+    ddf = duck.sql(entry_mod.oracle_sql()["threshold_sweep"]).df()
+    assert {c: str(ddf[c].dtype) for c in counts} == dict.fromkeys(counts, "int64")
+    sdf = entry_mod.queries()["threshold_sweep"](spark, SF_DIR)
+    assert {c: t for c, t in sdf.dtypes if c in counts} == dict.fromkeys(counts, "bigint")
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

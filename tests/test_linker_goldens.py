@@ -187,3 +187,34 @@ def test_zero_mentions_zero_links(spark, golden_model):
             mentions, turns, golden_model.kb, golden_model.cand, fuzzy_rescue=True
         ).collect()
     assert links == []
+
+
+def test_threshold_cut_keeps_ties_that_straddle_the_threshold(spark, golden_model, monkeypatch):
+    """Similarity rows below the rounded threshold never reach the argmax,
+    and that cut is exact: two aliases tied at TIE_DIGITS on either side of
+    the threshold still rank by alias asc, so the text links only when the
+    lower alias is the one above the threshold — what the uncut argmax
+    followed by the strict raw > gives. A raw > pre-filter would instead
+    link "zzqqxv" to "B"."""
+    from spacy_ann_linker_spark.candidates import generate
+    from spacy_ann_linker_spark.link.linker import memo_scope
+
+    eps = 1e-15
+    sims = spark.createDataFrame(
+        [
+            ("zzqqxv", "A", 0.7 - eps), ("zzqqxv", "B", 0.7 + eps),
+            ("zzqqxw", "A", 0.7 + eps), ("zzqqxw", "B", 0.7 - eps), ("zzqqxw", "0", 0.5),
+        ],
+        "text string, alias string, similarity double",
+    )
+    monkeypatch.setattr(
+        generate, "_similarities", lambda model, texts, *a, **kw: sims.join(texts, "text", "left_semi")
+    )
+    t = spark.createDataFrame([("zzqqxv",), ("zzqqxw",)], "text string")
+    with memo_scope():
+        got = [tuple(r) for r in best_aliases(golden_model.cand, t, threshold=0.7).collect()]
+        uncut = generate.generate_best_candidates(golden_model.cand, t).filter(
+            F.col("similarity") > 0.7
+        )
+        want = [tuple(r) for r in uncut.collect()]
+    assert got == want == [("zzqqxw", "A", 0.7 + eps)]

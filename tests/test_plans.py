@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 SF = "/root/testdata/sf0.001"
 # Spark jobs per call (test_link_job_budget, test_serve_request_job_budget),
 # each just above the count measured on a 4-core local[8] session
-JOB_BUDGET_RESOLVED = 34  # 55 before J4/J5 moved into the distinct-texts memo
-JOB_BUDGET_SIMILARITY = 61  # 58 before
-JOB_BUDGET_SERVE = 29  # 39 before
+JOB_BUDGET_RESOLVED = 28  # 34 before the memo moved to mention grain (measured 32 -> 26)
+JOB_BUDGET_SIMILARITY = 55  # 61 before (59 -> 53)
+JOB_BUDGET_SERVE = 25  # 29 before (27 -> 23)
 
 
 def _plan(df) -> str:
@@ -54,7 +54,7 @@ TYPO = "Reserch"
 
 def _golden_links(spark, golden_model, typo=False, **kw):
     """The gazetteer's verbatim "Research"/"ML" mentions over 32 turns, all
-    resolved inside the distinct-texts memo; typo=True adds one TYPO
+    resolved inside the mention memo; typo=True adds one TYPO
     mention on the first turn."""
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
     from spacy_ann_linker_spark.schemas import MENTION_SCHEMA
@@ -107,10 +107,11 @@ def test_similarity_link_plan_has_no_cartesian_product(spark, golden_model, monk
     assert all("BroadcastHashJoin" in p for p in plans)
 
 
-def test_no_broadcast_link_shuffles_the_gazetteer_join(spark, golden_model):
+def test_no_broadcast_link_shuffles_the_gazetteer_join(spark, golden_model, monkeypatch):
     """broadcast_kb=False reaches the default mention extraction too: with
     size-based broadcasts off, the gazetteer's token->alias join on `_k`
-    plans as a shuffle join, and the links equal the default run's."""
+    plans as a shuffle join, and the links equal the default run's. The
+    extraction runs inside the first memo, so its plan is the one audited."""
     import re
 
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
@@ -123,10 +124,10 @@ def test_no_broadcast_link_shuffles_the_gazetteer_join(spark, golden_model):
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        plans = _memo_plans(monkeypatch)
         with memo_scope():
-            links = link_transcripts(golden_model, turns, broadcast_kb=False)
-            plan = _plan(links)
-            got = sorted(links.collect())
+            got = sorted(link_transcripts(golden_model, turns, broadcast_kb=False).collect())
+        plan = plans[0]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
     k_joins = [
@@ -152,11 +153,12 @@ def test_link_plan_does_not_nest_memo_plans(spark, golden_model):
 
 
 def test_link_memos_read_the_turns_once(spark, golden_model):
-    """Building the link memos scans the turn source exactly once: the JW
-    rescue must anti-join against the distinct-texts memo, not recompute
-    the distinct (and with it mention extraction) from the source — a cut
-    memo is a checkpoint scan, which Spark's cache substitution cannot match
-    a recomputed plan against."""
+    """Building the link memos scans the turn source exactly once, and the
+    whole call twice: mention extraction runs once, inside the mention memo,
+    and the output pass reads only memos except for the context semi-join
+    over the turns. Nothing may recompute extraction from the source — a
+    cut memo is a checkpoint scan, which Spark's cache substitution cannot
+    match a recomputed plan against."""
     from spacy_ann_linker_spark.data.transcripts import generate_transcripts
     from spacy_ann_linker_spark.link.linker import memo_scope
     from spacy_ann_linker_spark.pipeline import link_transcripts
@@ -171,8 +173,10 @@ def test_link_memos_read_the_turns_once(spark, golden_model):
 
     source = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4).map(tap), turns.schema)
     with memo_scope():
-        link_transcripts(golden_model, source, fuzzy_rescue=True)
+        links = link_transcripts(golden_model, source, fuzzy_rescue=True)
         assert reads.value == len(rows)
+        assert links.collect()
+        assert reads.value == 2 * len(rows)
 
 
 @pytest.mark.parametrize(
